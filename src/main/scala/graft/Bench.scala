@@ -95,6 +95,19 @@ object Bench {
     var fixC = Map.empty[String, Double]   // cold-pass fixture seconds
     var poolC = Map.empty[String, Double]  // cold-pass pool-build seconds
     var runBest = Map.empty[String, Double]
+    // generated-class compiles and Janino compile seconds per run, from
+    // Spark's own counters (CodegenMetrics, CodeGenerator.compileTime):
+    // cold = the pass-1 run, warm = the pass-2 run. The count is fixed
+    // by the plans and the suite order, so benchdiff flags any rise
+    // without a noise band; a warm run that compiles anything means a
+    // class fell out of the codegen cache (Sessions.configure sizes it).
+    var codegenC = Map.empty[String, (Long, Double)]
+    var codegenW = Map.empty[String, (Long, Double)]
+    def codegenNow(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime)
     // the AQE-aware metric rollup lives in plans.ExecMetrics so the
     // PlanAudit spec can pin the same plumbing the artifact reports
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
@@ -103,6 +116,7 @@ object Bench {
         recordComponents: Boolean = false): Double = {
       graft.streaming.StreamStats.drainProgress() // clear stale events
       Fixtures.drainBuilt(); CachePool.drainBuilt() // clear stale builds
+      val (c0, ct0) = codegenNow()
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -121,7 +135,12 @@ object Bench {
         val fix = Fixtures.drainBuilt().map(_._2).sum
         val pool = CachePool.drainBuilt().map(_._2).sum
         val run = math.max(0.0, dt - fix - pool)
-        if (recordComponents) { fixC += name -> fix; poolC += name -> pool }
+        val (c1, ct1) = codegenNow()
+        val cg = (c1 - c0, (ct1 - ct0) / 1e9)
+        if (recordComponents) {
+          fixC += name -> fix; poolC += name -> pool; codegenC += name -> cg
+        }
+        if (recordShuffle) codegenW += name -> cg
         runBest += name -> math.min(runBest.getOrElse(name, run), run)
         if (recordShuffle) {
           val prog = graft.streaming.StreamStats.drainProgress()
@@ -306,11 +325,19 @@ object Bench {
       .map { n =>
         val f = fixC.getOrElse(n, 0.0); val p = poolC.getOrElse(n, 0.0)
         val r = math.max(0.0, cold(n) - f - p)
-        s""""$n":{"fixture":${fmt(f)},"pool":${fmt(p)},"run":${fmt(r)}}"""
+        val (cc, cs) = codegenC.getOrElse(n, (0L, 0.0))
+        s""""$n":{"fixture":${fmt(f)},"pool":${fmt(p)},"run":${fmt(r)},""" +
+          s""""codegen_compiles":$cc,"codegen_s":${fmt(cs)}}"""
       }.mkString("{", ",", "}")
+    // warm-pass codegen per query (cold-pass values ride cold_components)
+    val warmCodegen = codegenW.toSeq.sortBy(_._1)
+    val codegenJson =
+      s""""codegen_compiles":${warmCodegen.map { case (k, (c, _)) =>
+        "\"" + k + "\":" + c }.mkString("{", ",", "}")},""" +
+      s""""codegen_s":${jsonOf(warmCodegen.map { case (k, (_, t)) => k -> t })}"""
     val runJson = jsonOf(runBest.toSeq.sortBy(_._1))
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonOf(sorted)},"cold":${jsonOf(cold.toSeq.sortBy(_._1))},"cold_components":$coldCompJson,"run_s":$runJson,"retry":$retryJson,"pooled":$pooledJson,"shuffle_mb":$shuffleJson,"spill_mb":$spillJson,"peak_mem_mb":$peakJson,"calib_series":$probeJson,"streaming":$streamingJson,"stream_breakdown":$streamBreakJson,"calib":$calibJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonOf(sorted)},"cold":${jsonOf(cold.toSeq.sortBy(_._1))},"cold_components":$coldCompJson,"run_s":$runJson,$codegenJson,"retry":$retryJson,"pooled":$pooledJson,"shuffle_mb":$shuffleJson,"spill_mb":$spillJson,"peak_mem_mb":$peakJson,"calib_series":$probeJson,"streaming":$streamingJson,"stream_breakdown":$streamBreakJson,"calib":$calibJson,"sf":"$sfDir"}"""
     if (args.isEmpty) // a filtered profiling run must not clobber the artifact
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_FULL.json"),
@@ -324,14 +351,14 @@ object Bench {
       if (args.isEmpty) sorted.filter(p => headline(p._1)) else sorted
     // npooled only: the full pooled name list lives in BENCH_FULL.json
     // (the driver's stdout capture is size-bounded)
-    // filtered profiling runs also print their shuffle volumes (the
-    // full sweep's map lives in BENCH_FULL.json only — stdout is
-    // size-bounded)
+    // filtered profiling runs also print their shuffle volumes and
+    // warm-pass codegen (the full sweep's maps live in BENCH_FULL.json
+    // only — stdout is size-bounded)
     val shortShuffle =
       if (args.isEmpty) "" else {
         val sb = if (streamBreak.isEmpty) ""
           else s""","stream_breakdown":$streamBreakJson"""
-        s""","shuffle_mb":$shuffleJson$sb"""
+        s""","shuffle_mb":$shuffleJson,$codegenJson$sb"""
       }
     val shortLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${sorted.size},"npooled":${pooled.size},"nretried":${retry.size},"calib":$calibJson,"queries":${jsonOf(stdoutQs)}$shortShuffle,"sf":"$sfDir","full":"BENCH_FULL.json"}"""

@@ -291,8 +291,7 @@ object Similarity {
     */
   def nnDescentRound(s: SparkSession, dir: String, k: Int = 5,
       withCounts: Boolean = false): DataFrame = {
-    val knn = directedKnn(s, dir, k)
-    val refined = refinedRound1(s, dir, knn, k)
+    val Seq(knn, refined) = refinedChain(s, dir, k, 1)
     val counted = probeHitCurve(s, dir, k,
       Seq("seed_hits" -> knn, "refined_hits" -> refined))
     val out =
@@ -322,7 +321,6 @@ object Similarity {
   def nnDescent(s: SparkSession, dir: String, k: Int = 5,
       rounds: Int = 2, withCounts: Boolean = false): DataFrame = {
     require(rounds >= 1, "nnDescent: need at least one round")
-    val seed = directedKnn(s, dir, k)
     // intermediate rounds are POOLED, not localCheckpoint'ed: the cut
     // serves the same purpose (step r+1 and the hit eval both read
     // round r without re-executing it), but a checkpoint re-ran the
@@ -332,10 +330,8 @@ object Similarity {
     // share one build (the directedKnn-seed discipline, one level up).
     // The FINAL round's list is consumed once by the hit eval, so
     // materializing it would be pure extra cost either way.
-    val lists = (1 to rounds).scanLeft(seed) { (l, r) =>
-      if (r < rounds) refinedRound1Chain(s, dir, l, k, r)
-      else refineOnce(s, dir, l, k)
-    }
+    val chain = refinedChain(s, dir, k, rounds - 1)
+    val lists = chain :+ refineOnce(s, dir, chain.last, k)
     val named = lists.zipWithIndex.map { case (l, r) =>
       s"hits_r$r" -> l }
     val counted = probeHitCurve(s, dir, k, named)
@@ -349,28 +345,19 @@ object Similarity {
     out.orderBy("vec_id")
   }
 
-  /** Pooled refinement round r over `list` — the plan is built
+  /** The canonical NN-descent chain: the directedKnn(dir, k) seed
+    * followed by pooled refinement rounds 1..`rounds`, each derived
+    * here from its predecessor — so (dir, k, r), all the pool tag
+    * holds, determines every round's plan. Each round's plan is built
     * OUTSIDE the pool's build closure (a nested cached() inside it
     * would run jobs under the memo lock; round-13 ADVICE class).
-    *
-    * PRECONDITION (round-14 ADVICE): the pool tag encodes (dir, k, r)
-    * but not `list`, so `list` MUST be the canonical round-(r−1)
-    * chain seeded from directedKnn(dir, k) — both current callers
-    * pass exactly that; a caller handing a different list for the
-    * same (dir, k, r) would silently read the wrong cached round.
     */
-  private def refinedRound1Chain(s: SparkSession, dir: String,
-      list: DataFrame, k: Int, r: Int): DataFrame = {
-    val next = refineOnce(s, dir, list, k)
-    graft.CachePool.cached(s, s"sim.nndRound:$dir:$k:$r")(next)
-  }
-
-  /** NN-descent round 1 off the shared seed, pooled under the tag
-    * nnDescentRound and nnDescent's chain both resolve.
-    */
-  private def refinedRound1(s: SparkSession, dir: String,
-      list: DataFrame, k: Int): DataFrame =
-    refinedRound1Chain(s, dir, list, k, 1)
+  private def refinedChain(s: SparkSession, dir: String, k: Int,
+      rounds: Int): Seq[DataFrame] =
+    (1 to rounds).scanLeft(directedKnn(s, dir, k)) { (prev, r) =>
+      val next = refineOnce(s, dir, prev, k)
+      graft.CachePool.cached(s, s"sim.nndRound:$dir:$k:$r")(next)
+    }
 
   /** One NN-descent refinement: rescore the undirected 2-hop
     * candidate set of `list` (∪ the list itself) exactly and keep

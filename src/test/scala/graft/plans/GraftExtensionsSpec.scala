@@ -6,15 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The extension needs its own session (spark.sql.extensions is fixed
   * at session build), so this spec does not share SparkSpec.session.
+  * It still goes through `Sessions.configure` (test sessions must not
+  * drift from the configs the library requires); only the master and
+  * partition count are its own.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
+  private lazy val spark: SparkSession = graft.Sessions.configure(
+    SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-ext-test")
+      .config("spark.sql.shuffle.partitions", "2"))
     .getOrCreate()
 
   // parquet-backed (a literal Seq becomes a LocalRelation and the whole

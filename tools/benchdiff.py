@@ -15,6 +15,10 @@ change. With calib_series (round-8+ artifacts) the probe nearest the
 query in sweep order is used, which localizes mid-sweep load bursts;
 older artifacts fall back to the pre/post pair's median.
 
+Codegen compile counts (`codegen_compiles`, where both artifacts carry
+them) are compared without any of that: they are fixed by the plans,
+so every per-query rise is listed.
+
 MEASUREMENT BREAK (r6 -> r7): pre-r7 artifacts were materialized via
 df.count(), which let Catalyst prune cardinality-preserving work
 (windows, sorts, ALL column evaluation) — expression-bound queries
@@ -95,6 +99,27 @@ def machine_speed(art):
     return statistics.median(vals) if vals else None
 
 
+def codegen_rises(old, new):
+    """Per-query rises in generated-class compiles: `codegen_compiles`
+    (warm pass) and `cold_components[q].codegen_compiles` (cold pass).
+    The counts are fixed by the plans and the suite order, not by the
+    machine, so any rise is flagged as is: no noise band, no probe
+    normalization. Artifacts without the fields compare as empty."""
+    def warm(art):
+        return art.get("codegen_compiles") or {}
+
+    def cold(art):
+        return {k: v["codegen_compiles"]
+                for k, v in (art.get("cold_components") or {}).items()
+                if "codegen_compiles" in v}
+    rises = []
+    for label, get in (("warm", warm), ("cold", cold)):
+        o, n = get(old), get(new)
+        rises += [(q, label, o[q], n[q]) for q in sorted(set(o) & set(n))
+                  if n[q] > o[q]]
+    return rises
+
+
 def main(old_path, new_path, threshold=1.3):
     old, new = load(old_path), load(new_path)
     oq = {k: v for k, v in old.get("queries", {}).items() if v > 0}
@@ -150,6 +175,12 @@ def main(old_path, new_path, threshold=1.3):
           f"work, {n_run} on the run_s component); "
           f"median probe-normalized ratio {med:.2f}")
     print(f"ambient-load factor (new calib / old calib) ~{speed:.2f}")
+    rises = codegen_rises(old, new)
+    if rises:
+        print(f"\n{len(rises)} per-query rises in codegen compiles:")
+        print(f"{'query':34s} {'pass':>5s} {'old':>6s} {'new':>6s}")
+        for name, label, o, n in rises:
+            print(f"{name:34s} {label:>5s} {o:6d} {n:6d}")
     flagged = [r for r in rows if r[4] > threshold or r[4] < 1 / threshold]
     if not flagged:
         print(f"no query beyond {threshold}x after normalization")
