@@ -1,21 +1,58 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-/** Parquet loaders for the driver-generated testdata tables
-  * (/root/repo/TESTDATA.md). Every operator entry point takes
-  * `(SparkSession, sfDir)` and reads only through here, so Catalyst
-  * sees a plain parquet relation and can push filters/projections
-  * into the scan.
+/** Parquet loaders for the testdata tables (TESTDATA.md). Every
+  * operator entry point takes `(SparkSession, sfDir)` and reads only
+  * through here, so Catalyst sees a plain parquet relation and can
+  * push filters/projections into the scan.
+  *
+  * Schemas are inferred once per file per JVM. A bare
+  * `spark.read.parquet(path)` infers the schema by running a one-task
+  * Spark job that reads the file's footer, and every query builds its
+  * reads afresh, so that job used to precede most queries (14 of the
+  * 24 build-phase jobs of perfbench's `etl_daily`). `load` keeps the
+  * inferred schema in a JVM-wide memo and passes it to
+  * `spark.read.schema(...)`, which skips inference. The memo key is
+  * everything that shapes the inferred schema: the file's qualified
+  * path, length and modification time (a rewritten file is inferred
+  * again) and the session's values of `schemaConfs`. A hit costs one
+  * `getFileStatus` per read; nothing else is cached across sessions.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Session settings that change what parquet schema inference
+    * returns for the same file (see `events` for the `ts` variants
+    * they produce). */
+  private val schemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private case class SchemaKey(path: String, len: Long, mtime: Long,
+      confs: Seq[String])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val hp = new Path(path)
+    val st = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp)
+    val key = SchemaKey(st.getPath.toString, st.getLen,
+      st.getModificationTime, schemaConfs.map(spark.conf.get))
+    val schema = schemas.computeIfAbsent(key,
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Spread a small-file scan across all cores. The testdata tables are
     * single small parquet files → one input split → CPU-heavy per-row

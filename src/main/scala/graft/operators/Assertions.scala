@@ -244,12 +244,14 @@ object Assertions {
 
   /** sim_ann_lsh: 6-bit random-hyperplane buckets on a near-isotropic
     * corpus retrieve few GLOBAL top-3 neighbors (measured recall 0 at
-    * sf0.01 — expected: the top-3 sims here are weak, and weak-angle
-    * pairs rarely agree on all 6 sign bits), so a recall bound would
-    * pin noise. The LSH contract that IS exact: every pair the bucket
-    * join emits must carry the TRUE cosine — checked by joining the
-    * ANN output against the full brute-force ranking and demanding
-    * sim equality on every row — and every probe must come back.
+    * sf0.01 with a single-bucket probe — expected: the top-3 sims here
+    * are weak, and weak-angle pairs rarely agree on all 6 sign bits),
+    * so a recall bound would pin noise. The LSH contract that IS
+    * exact: every pair the bucket join emits must carry the TRUE
+    * cosine — checked by joining the ANN output against the full
+    * brute-force ranking and demanding sim equality on every row — and
+    * every probe must come back (the Hamming-1 multi-probe answers a
+    * probe that sits alone in its own bucket).
     */
   def annLshRecall(s: SparkSession, dir: String): DataFrame = {
     val ann = Similarity.annLsh(s, dir)

@@ -25,45 +25,47 @@ object Pipelines {
     * chain (X8).
     */
   def insightGold(s: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        col("c_acctbal"), col("n_name").as("nation"),
-        col("r_name").as("region"))
+    // item totals per order, folded into the one customer rollup of
+    // orders; moneySum is an exact decimal sum, so summing per-order
+    // partial sums gives the same total_qty
+    val orderItems = Tables.lineitem(s, dir)
+      .groupBy("l_orderkey")
+      .agg(count(lit(1)).as("items"), sum(money(col("l_quantity"))).as("qty"))
 
     val orderAgg = Tables.orders(s, dir)
+      .join(orderItems, col("o_orderkey") === col("l_orderkey"), "left")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),
         moneySum(col("o_totalprice")).as("total_spend"),
         max(struct(col("o_orderdate"), col("o_orderkey"))).as("last"),
-        max(col("o_orderstatus")).as("max_status"))
+        max(col("o_orderstatus")).as("max_status"),
+        sum(col("items")).as("n_lineitems"),
+        sum(col("qty")).cast("double").as("total_qty"))
       .select(col("o_custkey"), col("n_orders"), col("total_spend"),
         col("last.o_orderdate").as("last_orderdate"),
         col("last.o_orderkey").as("last_orderkey"),
-        col("max_status"))
-
-    val itemAgg = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_custkey")
-      .agg(count(lit(1)).as("n_lineitems"),
-        moneySum(col("l_quantity")).as("total_qty"))
+        col("max_status"), col("n_lineitems"), col("total_qty"))
 
     val eventAgg = Tables.events(s, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         count(when(col("event_type") === "purchase", 1)).as("n_purchases"))
 
-    cust
+    // The dimensions join last, so the customer scan feeds its
+    // c_custkey exchange directly and that stage starts with the
+    // first ones. Behind the dimension broadcasts it started only
+    // when they finished, and whether it ran at all depended on
+    // whether AQE had by then turned the join into a broadcast.
+    Tables.customer(s, dir)
       .join(orderAgg, col("c_custkey") === col("o_custkey"), "left")
-      .join(itemAgg.withColumnRenamed("o_custkey", "i_custkey"),
-        col("c_custkey") === col("i_custkey"), "left")
       .join(eventAgg, col("c_custkey") === col("user_id"), "left")
+      .join(broadcast(Tables.nation(s, dir)),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.region(s, dir)),
+        col("n_regionkey") === col("r_regionkey"))
       .select(
         col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        col("nation"), col("region"),
+        col("n_name").as("nation"), col("r_name").as("region"),
         coalesce(col("n_orders"), lit(0L)).as("n_orders"),
         coalesce(col("total_spend"), lit(0.0)).as("total_spend"),
         col("last_orderdate"),

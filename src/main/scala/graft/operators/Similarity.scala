@@ -126,16 +126,22 @@ object Similarity {
        |      if((xxhash64(p * 64 + d) & 1) = 1, 1.0d, -1.0d)) >= 0d,
        |    shiftleft(1L, p), 0L))""".stripMargin)
 
-  /** LSH-bucketed ANN: candidates share the probe's bucket (equi-join
-    * on bucket id — at 100 TB this is a hash-partitioned join over
-    * ~|corpus|/64 per bucket instead of a cross join), then exact
-    * cosine top-3 within the bucket.
+  /** LSH-bucketed ANN with Hamming-1 multi-probe: candidates sit in
+    * the probe's bucket or in one of the 6 buckets that differ from it
+    * in one sign bit (equi-join on bucket id — at 100 TB this is a
+    * hash-partitioned join over ~7·|corpus|/64 rows per probe instead
+    * of a cross join), then exact cosine top-3 over them. A probe
+    * alone in its own bucket still gets candidates from the
+    * neighbouring ones.
     */
   def annLsh(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val c = corpus(s, dir).withColumn("bucket", lshBucket("v"))
     val probes = c.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket"))
+        col("nrm").as("qn"),
+        explode(array(col("bucket") +:
+          (0 until 6).map(b => col("bucket").bitwiseXOR(1L << b)): _*))
+          .as("bucket"))
     val sims = c.join(broadcast(probes), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

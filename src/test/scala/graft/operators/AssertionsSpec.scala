@@ -46,6 +46,14 @@ class AssertionsSpec extends SparkSpec {
     allTrue(Assertions.sketchRollupBound(spark, sfDir))
   }
 
+  test("sim_ann_lsh answers every probe on a GenData heaps sf0.01 corpus") {
+    // 80 vectors in 64 buckets: a probe can sit alone in its own
+    // bucket, and only the Hamming-1 neighbour buckets answer it
+    val dir = java.nio.file.Files.createTempDirectory("graft_heaps").toString
+    graft.GenData.generate(spark, 0.01, dir)
+    allTrue(Assertions.annLshRecall(spark, dir))
+  }
+
   test("ANN recall assertions hold (lsh / ivf / pq / ivfpq)") {
     allTrue(Assertions.annLshRecall(spark, sfDir))
     allTrue(Assertions.annIvfRecall(spark, sfDir))

@@ -20,7 +20,23 @@ see whether the box itself drifted between passes.
 
 Exit 0 always (adjudication output, not a gate); the table is the
 deliverable — paste it into PLANS.md next to the flag it clears.
+
+    python3 tools/abdiff.py --perfbench <workload> [--pairs N] [--seed S]
+        <commitA> [<commitB>]
+
+runs the declared benchmark (BENCHMARK.json's command, `--trace 0`,
+its run_seconds) instead: N pairs (default 10), pair i on seed S+i in
+both checkouts, alternating which side runs first. For each end-to-end
+metric it prints each side's median and quartiles, B's wins and the
+benchmark's rule for a claimed gain (B wins at least 9/10 of the pairs
+and the medians differ by more than A's interquartile range), and
+whether B's median is worse than A's by more than the metric's bound.
+It also counts each side's runs that report `correct: false`,
+`failed > 0` or no result. A commit argument that names a directory is
+used as an existing checkout (its `.bench_build/` and `.bench_data/`
+are reused).
 """
+import argparse
 import json
 import os
 import statistics
@@ -39,7 +55,10 @@ def sh(cmd, cwd=REPO, capture=False):
 
 def ensure_worktree(commit):
     """Worktree for `commit` under .tmp/ (gitignored), reused if it
-    already exists at the right revision."""
+    already exists at the right revision. A directory is taken as an
+    existing checkout."""
+    if os.path.isdir(commit):
+        return os.path.abspath(commit)
     short = sh(["git", "rev-parse", "--short", commit],
                capture=True).strip()
     path = os.path.join(REPO, ".tmp", f"ab-{short}")
@@ -71,8 +90,89 @@ def bench_once(cwd, queries, sf_dir, cpus):
     raise SystemExit(f"no bench line from {cwd}")
 
 
+def perfbench_once(cwd, bench, workload, seed):
+    """One `--trace 0` benchmark run; its result object, or None when
+    the run printed none."""
+    cmd = [*bench["command"], "--workload", workload, "--seed", str(seed),
+           "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+    out = subprocess.run(cmd, cwd=cwd, text=True, capture_output=True)
+    for line in reversed(out.stdout.splitlines()):
+        if line.startswith("{"):
+            return json.loads(line)
+    sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-2000:] + "\n")
+    return None
+
+
+def perfbench_ab(workload, pairs, seed0, dir_a, dir_b):
+    """Interleaved A/B of the declared benchmark; returns the report
+    as a dict and prints it as a table."""
+    bench = json.load(open(os.path.join(REPO, "BENCHMARK.json")))
+    runs = {"A": [], "B": []}
+    for i in range(pairs):
+        order = ("A", "B") if i % 2 == 0 else ("B", "A")
+        for side in order:
+            d = dir_a if side == "A" else dir_b
+            runs[side].append(perfbench_once(d, bench, workload, seed0 + i))
+        print(f"[abdiff] {workload} pair {i + 1}/{pairs} "
+              f"(seed {seed0 + i}, {order[0]} first) done", file=sys.stderr)
+
+    bad = {side: sum(1 for r in rs if r is None or not r["correct"]
+                     or r["failed"] > 0) for side, rs in runs.items()}
+    rows = []
+    print(f"\nworkload={workload} pairs={pairs} seeds={seed0}.."
+          f"{seed0 + pairs - 1} bad runs (correct false, failed > 0 or "
+          f"no result): A={bad['A']} B={bad['B']}")
+    print(f"{'metric':<10} {'A q1/med/q3':>22} {'B q1/med/q3':>22} "
+          f"{'B wins':>7} {'gain rule':>9} {'bound':>6}")
+    for m in bench["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        both = [(a["metrics"][name]["value"], b["metrics"][name]["value"])
+                for a, b in zip(runs["A"], runs["B"]) if a and b]
+        if len(both) < 2:
+            print(f"{name:<10} fewer than two complete pairs")
+            continue
+        xa, xb = [a for a, _ in both], [b for _, b in both]
+        qa, qb = (statistics.quantiles(x, n=4, method="inclusive")
+                  for x in (xa, xb))
+        wins = sum(1 for a, b in both if (b < a if lower else b > a))
+        gain = qa[1] - qb[1] if lower else qb[1] - qa[1]
+        # a pair with a missing run counts as a pair the change lost
+        rule = wins >= 0.9 * pairs and gain > qa[2] - qa[0]
+        worse = -gain / qa[1] if qa[1] else 0.0
+        within = worse <= m["bound"]
+        rows.append({"metric": name, "a": xa, "b": xb, "a_quartiles": qa,
+                     "b_quartiles": qb, "b_wins": wins,
+                     "gain_rule": rule, "worse_frac": worse,
+                     "within_bound": within})
+        print(f"{name:<10} "
+              + f"{'/'.join(f'{x:.3f}' for x in qa):>22} "
+              + f"{'/'.join(f'{x:.3f}' for x in qb):>22} "
+              + f"{f'{wins}/{pairs}':>7} {'holds' if rule else 'no':>9} "
+              + f"{'ok' if within else 'WORSE':>6}")
+    return {"workload": workload, "pairs": pairs, "seed0": seed0,
+            "bad_runs": bad, "rows": rows}
+
+
+def perfbench_main(argv):
+    ap = argparse.ArgumentParser(prog="abdiff.py")
+    ap.add_argument("--perfbench", required=True, metavar="WORKLOAD")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("commit_a")
+    ap.add_argument("commit_b", nargs="?", default="WORKING")
+    a = ap.parse_args(argv)
+    dir_a = ensure_worktree(a.commit_a)
+    dir_b = REPO if a.commit_b == "WORKING" else ensure_worktree(a.commit_b)
+    print(f"A = {a.commit_a} ({dir_a})\nB = {a.commit_b} ({dir_b})")
+    rep = perfbench_ab(a.perfbench, a.pairs, a.seed, dir_a, dir_b)
+    print(json.dumps({"a": a.commit_a, "b": a.commit_b, **rep}))
+    return 0
+
+
 def main():
     argv = sys.argv[1:]
+    if "--perfbench" in argv:
+        return perfbench_main(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rounds = 2
