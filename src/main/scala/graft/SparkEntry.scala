@@ -477,7 +477,7 @@ object SparkEntry {
     // split integer quotients (no wide intermediates)
     "dq_sample_fit" -> (Quality.sampleFit _),
     // join-key skew audit: exact Gini coefficient per candidate key
-    // via the bucketed global-rank core; integer num/den + div-ppm
+    // via GlobalRank; integer num/den + div-ppm
     "dq_skew_gini" -> (Quality.skewGini _),
     // robust |x-med| > 3*MAD gate, discrete medians, integer cents
     "dq_outlier_mad" -> (Quality.madOutliers _),
@@ -688,7 +688,7 @@ object SparkEntry {
     // temperature-scaled domain mixture: p_d ∝ tokens_d^(1/2) via
     // exact integer isqrt + ppm/div laws (boosts low-resource langs)
     "text_mixture_temp" -> ((s, d) => TextAnalysis.mixtureTemperature(s, d)),
-    // length-curriculum staging over the bucketed global-rank core
+    // length-curriculum staging over GlobalRank
     "p_curriculum" -> ((s, d) => Pipelines.curriculumStages(s, d)),
     // DSIR importance resampling: target/proposal bigram-LM ratio as
     // the weight, deterministic A-ES draw — fully oracle-replayed
@@ -763,9 +763,6 @@ object SparkEntry {
       "stream_versioned_ingest" + // drain committing versions per batch
       "stream_mixture_drift" + // same drain, TWS domain counters
       "text_heavy_hitters" + // builder checkpoints the sketch pass
-      "w_percent_rank" + // builder collects quantile bounds + bucket counts
-      "p_curriculum" +   // same bucketed-rank bounds/counts collects
-      "w_ntile" +        // same bucket-rank machinery (ntile from rank)
       "dedup_minhash" +  // builder counts candidates to gate the broadcast
       "j15_top_supplier" + // builder checkpoints the per-supplier revenue
       "j11_important_parts" + // builder checkpoints the per-part values

@@ -375,7 +375,7 @@ object Advanced {
     * DISTRIBUTED SHAPE — the naive form is a quadratic NOT EXISTS
     * self-join, and the textbook sorted scan is a GLOBAL running min
     * (a single-partition window, the shape this engine bans). Shape
-    * here (the spendStanding bucket machinery applied to dominance):
+    * here (GlobalRank's buckets and prefix map applied to dominance):
     * (1) approx-quantile bounds on the primary key define ORDERED
     * buckets — assignment row-local; (2) per-bucket min of the
     * secondary key (≤ buckets rows to the driver) re-enters as a
@@ -388,104 +388,45 @@ object Advanced {
     * (earlier bucket ⇒ strictly cheaper so a ≤-size row dominates;
     * equal-price rows dominate only on strictly smaller size; equal
     * (price, size) duplicates dominate nothing — both survive, the
-    * standard skyline semantics). Bound quality affects only bucket
-    * BALANCE, never the result; driver traffic is O(buckets).
+    * standard skyline semantics).
     */
   def skyline(s: SparkSession, dir: String): DataFrame = {
-    // Both frontiers bucket by the SAME k1 (price) and differ only in
-    // the sign of k2, so the two skylineMinMin legs are fused into one
-    // pass: one approxQuantile, one per-bucket (min, max) collect, one
-    // bucketed window computing both legs' frames, and a row-local
-    // explode of the surviving frontier labels. Bucketing is a
-    // monotone function of k1, so any shared bounds yield the exact
-    // same frontiers the per-leg bounds did (bounds affect balance,
-    // never membership).
+    // both frontiers bucket by the same k1 (price) and differ only in
+    // the sign of k2: two legs of one skylineLegs pass
     val p = Tables.part(s, dir).select(col("p_partkey").as("id"),
       round(col("p_retailprice") * 100).cast("long").as("k1"),
       col("p_size").cast("long").as("k2"))
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val boundsArr = p.stat.approxQuantile("k1",
-      (1 until nBuckets).map(_.toDouble / nBuckets).toArray, 0.001)
-      .distinct.sorted
-    val bucket = boundsArr.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("k1") > lit(b), 1).otherwise(0)
-    }
-    val bucketed = p.withColumn("bkt", bucket)
-      .withColumn("k2n", -col("k2"))
-    // one collect serves both legs: leg 1 prefixes min(k2), leg 2
-    // prefixes min(-k2) = -max(k2)
-    val mm = bucketed.groupBy("bkt")
-      .agg(min(col("k2")).as("mn"), max(col("k2")).as("mx"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    def preminExpr(perBkt: Seq[(Int, Long)]): Column = {
-      val pre = perBkt.zip(perBkt.scanLeft(Long.MaxValue) {
-        case (acc, (_, m)) => math.min(acc, m) })
-        .map { case ((b, _), prem) => (b, prem) }
-      if (pre.isEmpty) lit(Long.MaxValue)
-      else element_at(map(pre.flatMap {
-        case (b, m) => Seq(lit(b), lit(m)) }: _*), col("bkt"))
-    }
-    val premin1 = preminExpr(mm.map { case (b, mn, _) => (b, mn) })
-    val premin2 = preminExpr(mm.map { case (b, _, mx) => (b, -mx) })
-    val spec = Window.partitionBy(col("bkt")).orderBy(col("k1"))
-    def dom(k2c: Column, premin: Column): Column = {
-      val strictPrev = min(k2c)
-        .over(spec.rangeBetween(Window.unboundedPreceding, -1))
-      val le = min(k2c)
-        .over(spec.rangeBetween(Window.unboundedPreceding, 0))
-      premin <= k2c || coalesce(strictPrev <= k2c, lit(false)) || le < k2c
-    }
-    bucketed
-      .withColumn("dom_small", dom(col("k2"), premin1))
-      .withColumn("dom_large", dom(col("k2n"), premin2))
+    skylineLegs(s, p, Seq(col("k2"), -col("k2")))
       .select(explode(expr(
-        """filter(array(if(dom_small, null, 'cheap_small'),
-                        if(dom_large, null, 'cheap_large')),
+        """filter(array(if(dom_0, null, 'cheap_small'),
+                        if(dom_1, null, 'cheap_large')),
                   x -> x is not null)""")).as("frontier"),
         col("id").as("p_partkey"), col("k1").as("price_cents"),
         col("k2").cast("int").as("p_size"))
       .orderBy("frontier", "p_partkey")
   }
 
-  /** The min-min 2-D skyline core over (id, k1, k2) LONG columns —
-    * split out so specs can drive it with hand-built and generated
-    * (anti-correlated, large-frontier) inputs. Returns the
-    * non-dominated rows.
+  /** The min-min 2-D skyline core over a LONG primary key `k1` and one
+    * LONG secondary column per leg: `in` plus a boolean `dom_<i>` per
+    * leg, true when another row dominates this one on (k1, leg i). All
+    * legs share one set of k1 buckets, one per-bucket min collect and
+    * one bkt-partitioned window.
     */
-  private[operators] def skylineMinMin(s: SparkSession, in: DataFrame)
-      : DataFrame = {
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val bounds = in.stat.approxQuantile("k1",
-      (1 until nBuckets).map(_.toDouble / nBuckets).toArray, 0.001)
-      .distinct.sorted
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("k1") > lit(b), 1).otherwise(0)
-    }
-    val bucketed = in.withColumn("bkt", bucket)
-    // per-bucket secondary-key min → strictly-earlier-bucket prefix
-    // min, re-entering as a literal map (O(buckets) driver traffic)
-    val mins = bucketed.groupBy("bkt").agg(min(col("k2")).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val premins = mins.zip(mins.scanLeft(Long.MaxValue) {
-      case (acc, (_, m)) => math.min(acc, m) })
-      .map { case ((b, _), pre) => (b, pre) }
-    val preminExpr =
-      if (premins.isEmpty) lit(Long.MaxValue)
-      else element_at(map(premins.flatMap {
-        case (b, m) => Seq(lit(b), lit(m)) }: _*), col("bkt"))
+  private[operators] def skylineLegs(s: SparkSession, in: DataFrame,
+      legs: Seq[Column]): DataFrame = {
+    val bucketed = GlobalRank.bucketed(s, in, "k1", descending = false)
+    val (premins, _) = GlobalRank.prefixMaps(bucketed, Nil,
+      legs.map(min(_)), Long.MaxValue)(math.min)
     val spec = Window.partitionBy(col("bkt")).orderBy(col("k1"))
-    val strictPrev = min(col("k2"))
-      .over(spec.rangeBetween(Window.unboundedPreceding, -1))
-    val le = min(col("k2"))
-      .over(spec.rangeBetween(Window.unboundedPreceding, 0))
-    bucketed
-      .withColumn("dominated",
-        preminExpr <= col("k2") ||
-          coalesce(strictPrev <= col("k2"), lit(false)) ||
-          le < col("k2"))
-      .filter(!col("dominated"))
-      .select(col("id"), col("k1"), col("k2"))
+    // one select, so every leg's frames share one Window operator
+    val doms = legs.zip(premins).zipWithIndex.map { case ((k2, premin), i) =>
+      val strictPrev = min(k2)
+        .over(spec.rangeBetween(Window.unboundedPreceding, -1))
+      val le = min(k2).over(spec.rangeBetween(Window.unboundedPreceding, 0))
+      (premin <= k2 || coalesce(strictPrev <= k2, lit(false)) || le < k2)
+        .as(s"dom_$i")
+    }
+    bucketed.select(col("*") +: doms: _*).drop("bkt")
   }
 
   /** Nearest-in-time join: for every purchase, the SAME user's

@@ -180,8 +180,9 @@ object Analytics {
     * verifies row-for-row.
     */
   def spendQuartiles(s: SparkSession, dir: String): DataFrame = {
-    val spend = custSpend(s, dir)
-    val (ranked, n) = withGlobalSpendRank(s, spend, descending = true)
+    val (ranked, counts) = GlobalRank.rank(s, custSpend(s, dir), Nil,
+      "total_spend", "o_custkey", descending = true)
+    val n = counts.values.sum
     val t = 4L
     val base = n / t
     val rem = n % t
@@ -394,27 +395,6 @@ object Analytics {
       .orderBy("cohort", "month_offset")
   }
 
-  /** percent_rank + cume_dist over customer spend: the relative-
-    * standing window pair (every percentile-gate pipeline's
-    * primitives — qualityFilter uses percent_rank internally; this is
-    * the first-class query surface). Ties resolved by the unique
-    * custkey in the ORDER BY so both engines agree.
-    *
-    * DISTRIBUTED: a truly global rank needs a total order, but not a
-    * single-task sort (`Window.orderBy` with no partition — the one
-    * shape that cannot finish at 100 TB). Shape here: (1) approx-
-    * quantile boundaries of the sort key (≤ buckets-1 scalars to the
-    * driver) define ORDERED buckets, assignment a pure row-local
-    * function of the value; (2) ONE hash shuffle ranks rows inside
-    * each bucket; (3) per-bucket counts (≤ buckets rows) come back to
-    * the driver and re-enter as a literal prefix-sum offset map, so
-    * global_rank = bucket_offset + local_rank, and percent_rank /
-    * cume_dist are row-local arithmetic over (global_rank, N) —
-    * bit-identical to the one-window formula because the unique
-    * tie-break makes rank ≡ row_number. Boundary quality affects only
-    * bucket BALANCE, never results (equal values never split across
-    * buckets). Driver traffic is O(buckets), like kmeans' centroids.
-    */
   /** Per-customer spend, pooled — the shared input of the three
     * global-ranking queries (percent_rank/cume_dist, ntile, top-k).
     */
@@ -425,137 +405,17 @@ object Analytics {
         .agg(moneySum(col("o_totalprice")).cast("double").as("total_spend"))
     }
 
-  /** Global row numbering over (total_spend, o_custkey) with NO
-    * single-partition window — shared by spendStanding and
-    * spendQuartiles: approx-quantile bucket bounds (driver holds
-    * nBuckets−1 doubles), rows bucketed row-locally, per-bucket
-    * row_number under a PARTITIONED window, bucket-count prefix-sum
-    * offsets re-entering as a literal map. Returns the ranked frame
-    * (column `grn`, 1-based, dense total order) and the row count.
-    * `descending` ranks highest spend first (ties break ascending on
-    * the customer key either way).
+  /** percent_rank + cume_dist over customer spend: the relative-
+    * standing window pair (every percentile-gate pipeline's
+    * primitives — qualityFilter uses percent_rank internally; this is
+    * the first-class query surface), row-local arithmetic over the
+    * GlobalRank row number and the row count. Ties resolved by the
+    * unique custkey in the ORDER BY so both engines agree.
     */
-  private def withGlobalSpendRank(s: SparkSession, spend: DataFrame,
-      descending: Boolean): (DataFrame, Long) =
-    withGlobalRank(s, spend, "total_spend", "o_custkey", descending)
-
-  /** The generic bucketed global-rank core (see spendStanding's
-    * scaladoc for the full distributed argument): dense 1-based rank
-    * over (valueCol, keyCol) with NO single-partition window —
-    * approx-quantile bounds define ordered buckets (quality affects
-    * only balance, never ranks), per-bucket counts re-enter as a
-    * literal prefix-sum offset map, one bucket-keyed window ranks
-    * locally. Returns (frame + `grn` column, total rows).
-    */
-  private[operators] def withGlobalRank(s: SparkSession, in: DataFrame,
-      valueCol: String, keyCol: String, descending: Boolean)
-      : (DataFrame, Long) = {
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val bounds0 = in.stat.approxQuantile(valueCol,
-      (1 until nBuckets).map(_.toDouble / nBuckets).toArray, 0.001)
-      .distinct.sorted
-    val bounds = if (descending) bounds0.reverse else bounds0
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + (if (descending) when(col(valueCol) < lit(b), 1)
-             else when(col(valueCol) > lit(b), 1)).otherwise(0)
-    }
-    val bucketed = in.withColumn("bkt", bucket)
-    val counts = bucketed.groupBy("bkt").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val offsets = counts.zip(counts.scanLeft(0L)(_ + _._2))
-      .map { case ((b, _), off) => (b, off) }.toSeq
-    val offExpr =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(map(offsets.flatMap {
-        case (b, o) => Seq(lit(b), lit(o)) }: _*), col("bkt"))
-    val localW = Window.partitionBy(col("bkt"))
-      .orderBy(if (descending) col(valueCol).desc else col(valueCol),
-        col(keyCol))
-    (bucketed.withColumn("grn", offExpr + row_number().over(localW))
-      .drop("bkt"), n)
-  }
-
-  /** Multi-dimension form of the bucketed global-rank core: rank the
-    * SAME frame independently on several value columns with ONE
-    * quantile-bounds job (multi-column approxQuantile) and ONE fused
-    * plan — the per-dimension rankings ride a single exploded
-    * (dim, bkt, sort-value, key) stream through ONE
-    * (dim, bkt)-partitioned window (descending dimensions negate
-    * their sort value so one ascending window ordering serves every
-    * dimension), bucket offsets stay the literal-map lookup fed by
-    * ONE marginals collect over the same stream, and a per-key
-    * aggregation reassembles the `grn_<i>` columns. The round-14 form
-    * ran one window exchange PER dimension; this runs one window
-    * exchange total (guide §2.4 — share one exchange) with the same
-    * two driver jobs. Rank semantics are exactly withGlobalRank's:
-    * same bounds
-    * per column, same ordered-bucket assignment, same per-bucket
-    * row_number + prefix-sum offsets, same (value, key) tie-break —
-    * negating a LongType sort value is order-isomorphic to `desc`, so
-    * the ranks are bit-identical. Value columns must be integral
-    * (they are: day counts, counts, cents) — a fractional type would
-    * coerce in the exploded struct.
-    *
-    * Returns one row per key: (keyCol, grn_0.., `__n` = row count).
-    */
-  private[operators] def withGlobalRanksMulti(s: SparkSession,
-      in: DataFrame, keyCol: String,
-      specs: Seq[(String, Boolean)]): DataFrame = {
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val allBounds = in.stat.approxQuantile(
-      specs.map(_._1).toArray, probs, 0.001)
-    val perDim = specs.zipWithIndex.map { case ((valueCol, desc), i) =>
-      val bounds0 = allBounds(i).distinct.sorted.toSeq
-      val bounds = if (desc) bounds0.reverse else bounds0
-      val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-        acc + (if (desc) when(col(valueCol) < lit(b), 1)
-               else when(col(valueCol) > lit(b), 1)).otherwise(0)
-      }
-      (i, valueCol, desc, bucket)
-    }
-    val exploded = in.select(col(keyCol),
-      explode(array(perDim.map { case (i, valueCol, desc, b) =>
-        struct(lit(i).as("dim"), b.as("bkt"),
-          (if (desc) -col(valueCol) else col(valueCol)).cast("long")
-            .as("sv"))
-      }: _*)).as("p"))
-      .select(col(keyCol), col("p.dim").as("dim"), col("p.bkt").as("bkt"),
-        col("p.sv").as("sv"))
-    // per-(dim, bkt) marginals: ONE collect of ≤ dims·buckets rows;
-    // offsets become a literal map lookup (an in-plan offsets join was
-    // A/B'd first — two extra broadcast builds cost more than the one
-    // tiny collect they replace)
-    val marginals = exploded.groupBy(col("dim"), col("bkt"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val n = marginals.filter(_._1 == 0).map(_._3).sum
-    val offExpr = element_at(map(marginals.groupBy(_._1).toSeq
-      .flatMap { case (dim, rows) =>
-        val counts = rows.map(t => (t._2, t._3)).sortBy(_._1)
-        counts.zip(counts.scanLeft(0L)(_ + _._2)).map {
-          case ((b, _), off) =>
-            (dim * 10000 + b, off)
-        }
-      }.flatMap { case (k, o) => Seq(lit(k), lit(o)) }: _*),
-      col("dim") * 10000 + col("bkt"))
-    val wRank = Window.partitionBy(col("dim"), col("bkt"))
-      .orderBy(col("sv"), col(keyCol))
-    exploded
-      .withColumn("rn", row_number().over(wRank))
-      .select(col(keyCol), col("dim"),
-        (offExpr + col("rn")).as("grn"))
-      .groupBy(col(keyCol))
-      .agg(max(when(col("dim") === 0, col("grn"))).as("grn_0"),
-        specs.indices.drop(1).map(i =>
-          max(when(col("dim") === i, col("grn"))).as(s"grn_$i")): _*)
-      .withColumn("__n", lit(n))
-  }
-
   def spendStanding(s: SparkSession, dir: String): DataFrame = {
-    val spend = custSpend(s, dir)
-    val (ranked, n) = withGlobalSpendRank(s, spend, descending = false)
+    val (ranked, counts) = GlobalRank.rank(s, custSpend(s, dir), Nil,
+      "total_spend", "o_custkey", descending = false)
+    val n = counts.values.sum
     ranked
       .select(col("o_custkey"), col("total_spend"),
         when(lit(n) > 1, (col("grn") - lit(1L)) / lit((n - 1).toDouble))
@@ -774,14 +634,13 @@ object Analytics {
     * customer-value grid: each dimension scored 1..5 by GLOBAL
     * quintile-of-rank, best first (most recent, most orders, highest
     * spend → 5), customers rolled up per (r,f,m) cell. Every
-    * dimension's ranking runs through the generic bucketed
-    * global-rank core — three rankings, zero single-partition
-    * windows — and the score is pure integer arithmetic off the
-    * exact rank (5 − (rank−1)·5 div n), so a DuckDB rank-window
-    * replay lands on identical cells. Recency is measured against
-    * the corpus max date (a 1-row broadcast), monetary in exact
-    * cents; the per-customer base is pooled (three rankings + any
-    * rerun share one orders aggregation).
+    * dimension's ranking runs through GlobalRank — three rankings,
+    * zero single-partition windows — and the score is pure integer
+    * arithmetic off the exact rank (5 − (rank−1)·5 div n), so a
+    * DuckDB rank-window replay lands on identical cells. Recency is
+    * measured against the corpus max date (a 1-row broadcast),
+    * monetary in exact cents; the per-customer base is pooled (three
+    * rankings + any rerun share one orders aggregation).
     */
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
     val base = graft.CachePool.cached(s, s"analytics.rfmBase:$dir") {
@@ -799,21 +658,26 @@ object Analytics {
             .as("recency"),
           col("frequency"), col("monetary_cents"))
     }
-    // all three rankings through the fused multi-dimension rank core:
-    // one quantile-bounds job, ONE (dim, bkt)-partitioned window for
-    // the trio, offsets and the row count joined in-plan (the round-14
-    // form ran three window exchanges + a marginals collect; guide
-    // §2.4 / §1.2)
-    val ranked = withGlobalRanksMulti(s, base, "o_custkey",
-      Seq(("recency", false), ("frequency", true),
-        ("monetary_cents", true)))
-    def score(i: Int) =
-      expr(s"cast(5 - (grn_$i - 1L) * 5L div __n as int)")
-    val cells = ranked
-      .withColumn("r_score", score(0))
-      .withColumn("f_score", score(1))
-      .withColumn("m_score", score(2))
-      .drop("grn_0", "grn_1", "grn_2", "__n")
+    // the three rankings ride one exploded (dim, sv, o_custkey)
+    // stream through one GlobalRank call (one (dim, bkt)-partitioned
+    // window, one bounds job, one offsets collect); descending
+    // dimensions negate sv so every dimension ranks ascending
+    val dims = Seq(("recency", false), ("frequency", true),
+      ("monetary_cents", true))
+    val exploded = base.select(col("o_custkey"),
+        explode(array(dims.zipWithIndex.map { case ((c, desc), i) =>
+          struct(lit(i).as("dim"),
+            (if (desc) -col(c) else col(c)).cast("long").as("sv"))
+        }: _*)).as("p"))
+      .select(col("o_custkey"), col("p.dim").as("dim"), col("p.sv").as("sv"))
+    val (ranked, perDim) = GlobalRank.rank(s, exploded, Seq("dim"), "sv",
+      "o_custkey", descending = false)
+    val n = perDim.getOrElse(Seq(0), 0L)
+    def score(i: Int) = expr(
+      s"cast(5 - (max(if(dim = $i, grn, null)) - 1L) * 5L div ${n}L as int)")
+    val cells = ranked.groupBy("o_custkey")
+      .agg(score(0).as("r_score"), score(1).as("f_score"),
+        score(2).as("m_score"))
     cells.groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_customers"),
         min(col("o_custkey")).as("min_custkey"))

@@ -167,28 +167,20 @@ object Learn {
     * single-partition window. The micro codomain is [0, 10⁶] at any
     * corpus size (6-decimal probabilities), so fixed-width buckets
     * (value div 10⁴ → ≤ 101) are constant-bounded: per-bucket totals
-    * collect to an O(101) literal offset map and the running sum is
-    * bucket-local — the same legality class as Analytics
-    * .withGlobalRank's bucketed rank core.
+    * collect to an O(101) literal offset map (GlobalRank.prefixMaps)
+    * and the running sum is bucket-local.
     */
   private def prefixTotals(g: DataFrame, valCol: String,
       cntCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bucketed = g.withColumn("bkt",
       expr(s"cast($valCol div 10000 as int)"))
-    val counts = bucketed.groupBy("bkt")
-      .agg(sum(col(cntCol)).as("tot"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = counts.zip(counts.scanLeft(0L)(_ + _._2))
-      .map { case ((b, _), off) => (b, off) }
-    val offExpr =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(map(offsets.toSeq.flatMap {
-        case (b, o) => Seq(lit(b), lit(o)) }: _*), col("bkt"))
+    val (Seq(offset), _) = GlobalRank.prefixMaps(bucketed, Nil,
+      Seq(sum(col(cntCol))), 0L)(_ + _)
     val w = Window.partitionBy(col("bkt")).orderBy(col(valCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     bucketed.withColumn("prev",
-      offExpr + coalesce(sum(col(cntCol)).over(w), lit(0L)))
+      offset + coalesce(sum(col(cntCol)).over(w), lit(0L)))
       .drop("bkt")
   }
 

@@ -196,6 +196,51 @@ object Multimodal {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Epoch SHUFFLE plan — the training-reader primitive on top of
+    * shardPlan: each epoch reads the shard manifest in a different
+    * deterministic pseudo-random order (WebDataset's epoch shuffling —
+    * decorrelates batch composition across epochs without moving a
+    * byte of data). The permutation key multiplies the shard's dense
+    * GLOBAL index into the mix — h = ((3g + epoch) · 2654435761) mod
+    * (10⁹+7) — because an ADDITIVE epoch term only rotates the order
+    * (adding a constant mod M preserves relative order except at the
+    * wrap), while shifting the multiplicand re-scrambles it; g itself
+    * and each epoch's position are global ranks through GlobalRank (a
+    * shard manifest at 100 TB is billions of rows — NOT
+    * calendar-bounded, so no single-partition window is acceptable
+    * here). Per-epoch determinism means any reader replica
+    * derives the same order with no coordination.
+    */
+  def epochShuffle(s: SparkSession, dir: String,
+      epochs: Int = 3): DataFrame = {
+    // pooled: the dense-index manifest feeds every epoch's ranking
+    val indexed = graft.CachePool.cached(s, s"mm.shardManifest:$dir") {
+      val manifest = shardPlan(s, dir)
+        .select(col("source"), col("shard_id"))
+        .withColumn("sk",
+          concat(col("source"), lit(":"), col("shard_id")))
+      val (g, _) = GlobalRank.rank(s, manifest, Nil, "shard_id", "sk",
+        descending = false)
+      g.withColumnRenamed("grn", "g")
+    }
+    // all epochs ride one exploded (epoch, h) stream through ONE
+    // GlobalRank call grouped by epoch
+    val exploded = indexed.select(col("source"), col("shard_id"),
+        col("sk"), explode(array((1 to epochs).map { e =>
+          struct(lit(e).as("epoch"),
+            (((col("g") * 3L + lit(e.toLong)) * lit(2654435761L)) %
+              lit(1000000007L)).as("h"))
+        }: _*)).as("p"))
+      .select(col("p.epoch").as("epoch"), col("source"),
+        col("shard_id"), col("sk"), col("p.h").as("h"))
+    val (ranked, _) = GlobalRank.rank(s, exploded, Seq("epoch"), "h", "sk",
+      descending = false)
+    ranked
+      .select(col("epoch"), col("source"), col("shard_id"), col("h"),
+        col("grn").as("position"))
+      .orderBy("epoch", "position")
+  }
+
   /** WebDataset-style SHARD PACKING manifest: sequence-pack payloads
     * into size-bounded shards per group (here `source` — one shard
     * series per dataset, the tar-shard layout samplers stream at
@@ -212,77 +257,6 @@ object Multimodal {
     * octet_length of the payload bytes (the UTF-8 stand-in the rest
     * of the mm family uses).
     */
-  /** Epoch SHUFFLE plan — the training-reader primitive on top of
-    * shardPlan: each epoch reads the shard manifest in a different
-    * deterministic pseudo-random order (WebDataset's epoch shuffling —
-    * decorrelates batch composition across epochs without moving a
-    * byte of data). The permutation key multiplies the shard's dense
-    * GLOBAL index into the mix — h = ((3g + epoch) · 2654435761) mod
-    * (10⁹+7) — because an ADDITIVE epoch term only rotates the order
-    * (adding a constant mod M preserves relative order except at the
-    * wrap), while shifting the multiplicand re-scrambles it; g itself
-    * and each epoch's position are global ranks through the bucketed
-    * global-rank core (a shard manifest at 100 TB is billions of
-    * rows — NOT calendar-bounded, so no single-partition window is
-    * acceptable here). Per-epoch determinism means any reader replica
-    * derives the same order with no coordination.
-    */
-  def epochShuffle(s: SparkSession, dir: String,
-      epochs: Int = 3): DataFrame = {
-    // pooled: the dense-index manifest feeds every epoch's ranking
-    val indexed = graft.CachePool.cached(s, s"mm.shardManifest:$dir") {
-      val manifest = shardPlan(s, dir)
-        .select(col("source"), col("shard_id"))
-        .withColumn("sk",
-          concat(col("source"), lit(":"), col("shard_id")))
-      val (g, _) = Analytics.withGlobalRank(s, manifest, "shard_id",
-        "sk", descending = false)
-      g.withColumnRenamed("grn", "g")
-    }
-    // ONE bucketed rank pass for all epochs: the per-epoch hashes ride
-    // an exploded (epoch, h) stream through one (epoch, bkt) window —
-    // one approxQuantile + one marginals collect instead of the
-    // per-epoch withGlobalRank machinery (3× two driver jobs + 3
-    // window exchanges + a union). Bounds come from the combined h
-    // distribution; bucketing is monotone in h within every epoch, so
-    // the (offset + row_number) ranks are exactly the per-epoch form's
-    // (bounds affect balance, never ranks).
-    val exploded = indexed.select(col("source"), col("shard_id"),
-        col("sk"), explode(array((1 to epochs).map { e =>
-          struct(lit(e).as("epoch"),
-            (((col("g") * 3L + lit(e.toLong)) * lit(2654435761L)) %
-              lit(1000000007L)).as("h"))
-        }: _*)).as("p"))
-      .select(col("p.epoch").as("epoch"), col("source"),
-        col("shard_id"), col("sk"), col("p.h").as("h"))
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val bounds = exploded.stat.approxQuantile("h",
-      (1 until nBuckets).map(_.toDouble / nBuckets).toArray, 0.001)
-      .distinct.sorted
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("h") > lit(b), 1).otherwise(0)
-    }
-    val bucketed = exploded.withColumn("bkt", bucket)
-    val marg = bucketed.groupBy("epoch", "bkt")
-      .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val offExpr = element_at(map(marg.groupBy(_._1).toSeq
-      .flatMap { case (e, rows) =>
-        val cs = rows.map(t => (t._2, t._3)).sortBy(_._1)
-        cs.zip(cs.scanLeft(0L)(_ + _._2)).map {
-          case ((b, _), off) => (e * 10000 + b, off) }
-      }.flatMap { case (k, o) => Seq(lit(k), lit(o)) }: _*),
-      col("epoch") * 10000 + col("bkt"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("epoch"), col("bkt"))
-      .orderBy(col("h"), col("sk"))
-    bucketed
-      .withColumn("position", offExpr + row_number().over(wRank))
-      .select(col("epoch"), col("source"), col("shard_id"), col("h"),
-        col("position"))
-      .orderBy("epoch", "position")
-  }
-
   def shardPlan(s: SparkSession, dir: String,
       targetBytes: Long = 32768L): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -431,9 +431,9 @@ object Pipelines {
     * Spark has no safe built-in for: `monotonically_increasing_id` is
     * sparse and partition-dependent, `row_number()` over an
     * unpartitioned window is the single-partition choke. Here the
-    * alphabetical dense rank comes from the bucketed global-rank
-    * core with an ORDER-PRESERVING numeric proxy (first two
-    * character codes: proxy < proxy ⇒ name < name, so sorting by
+    * alphabetical dense rank comes from GlobalRank with an
+    * ORDER-PRESERVING numeric proxy (first two character codes:
+    * proxy < proxy ⇒ name < name, so sorting by
     * (proxy, name) IS sorting by name and the bucket boundaries can
     * never contradict the final order) — buckets from the proxy's
     * quantiles, per-bucket window, literal offset map. The proxy
@@ -448,10 +448,10 @@ object Pipelines {
       .withColumn("proxy",
         (ascii(substring(col("name"), 1, 1)) * 256 +
           ascii(substring(col("name"), 2, 1))).cast("long"))
-    val (ranked, n) = Analytics.withGlobalRank(s, names, "proxy",
-      "name", descending = false)
+    val (ranked, counts) = GlobalRank.rank(s, names, Nil, "proxy", "name",
+      descending = false)
     ranked.select(col("name"), col("grn").as("surrogate_key"),
-      lit(n).as("n_names"))
+      lit(counts.values.sum).as("n_names"))
       .orderBy("name")
   }
 
@@ -612,8 +612,8 @@ object Pipelines {
     * Quality key is the integer n_chars with doc_id tie-break — a
     * total order, so the selection is deterministic and the DuckDB
     * oracle replays it with two rank windows. The per-language rank
-    * partitions by lang; the GLOBAL fill rank runs through the
-    * bucketed global-rank core (no single-partition window — the
+    * partitions by lang; the GLOBAL fill rank runs through
+    * GlobalRank (no single-partition window — the
     * PlanAudit rule every other global rank here obeys). The fill
     * quota derives from the ACTUAL floor count as a 1-row broadcast
     * (a language with < floorPerLang docs contributes what it has;
@@ -632,8 +632,8 @@ object Pipelines {
     val nFloor = floor.agg(count(lit(1)).as("n_floor"))
     val rest = ranked.filter(col("lr") > floorPerLang)
       .select("doc_id", "lang", "n_chars")
-    val (restRanked, _) = Analytics.withGlobalRank(s, rest,
-      "n_chars", "doc_id", descending = true)
+    val (restRanked, _) = GlobalRank.rank(s, rest, Nil, "n_chars",
+      "doc_id", descending = true)
     val fill = restRanked.crossJoin(broadcast(nFloor))
       .filter(col("grn") <= lit(total.toLong) - col("n_floor"))
       .select(col("doc_id"), col("lang"), col("n_chars"),
@@ -801,12 +801,12 @@ object Pipelines {
     * proxy (n_chars — the sequence-length curriculum: train on short
     * docs first, long ones later) and cut it into `stages` equal
     * rank slices, emitting each stage's size, difficulty band, and
-    * token share. The global total order runs through the bucketed
-    * rank core (Analytics.withGlobalRank — quantile-bucketed local
-    * windows + a literal offset map), never a single-partition
-    * window; the stage id is pure integer arithmetic on the rank,
-    * ((grn−1)·stages) div n, so the oracle replays it with a plain
-    * row_number. Stage rollup is a tiny groupBy(stage).
+    * token share. The global total order runs through GlobalRank
+    * (quantile-bucketed local windows + a literal offset map), never
+    * a single-partition window; the stage id is pure integer
+    * arithmetic on the rank, ((grn−1)·stages) div n, so the oracle
+    * replays it with a plain row_number. Stage rollup is a tiny
+    * groupBy(stage).
     */
   def curriculumStages(s: SparkSession, dir: String,
       stages: Int = 4): DataFrame = {
@@ -814,8 +814,9 @@ object Pipelines {
       .select(col("doc_id"), col("n_chars"),
         size(graft.operators.TextAnalysis.tokens(col("text")))
           .as("n_tok"))
-    val (ranked, n) = Analytics.withGlobalRank(s, docs, "n_chars",
+    val (ranked, counts) = GlobalRank.rank(s, docs, Nil, "n_chars",
       "doc_id", descending = false)
+    val n = counts.values.sum
     val perStage = ranked
       .withColumn("stage", expr(s"(($stages * (grn - 1)) div ${n}L)"))
       .groupBy("stage")

@@ -761,12 +761,12 @@ object Quality {
     *
     * With per-key counts x sorted ascending and ranked 1..n,
     * Gini = (2·Σi·xᵢ − (n+1)·Σx) / (n·Σx) — every term an exact
-    * integer. The rank is the bucketed global-rank core (no
-    * single-partition window; key ndv at 100 TB is fact-scale), equal
-    * counts commute in Σi·xᵢ so the tie order never changes the
-    * answer. gini_ppm = num·10⁶ div den in plain BIGINT — exact and
-    * overflow-free while num ≤ 9.2e12 (num ≤ 2·n·Σx, so comfortably
-    * past the fixture scales; beyond that swap the multiply into
+    * integer. The rank is GlobalRank's (no single-partition window;
+    * key ndv at 100 TB is fact-scale); equal counts commute in Σi·xᵢ,
+    * so the tie order never changes the answer. gini_ppm = num·10⁶
+    * div den in plain BIGINT — exact and overflow-free while
+    * num ≤ 9.2e12 (num ≤ 2·n·Σx, so comfortably past the fixture
+    * scales; beyond that swap the multiply into
     * decimal(38,0) with an explicit floor, the itemCf discipline —
     * NOT Spark's decimal division, whose scale clips to 6 digits and
     * can round across an integer before a floor). The double
@@ -775,59 +775,24 @@ object Quality {
     */
   def skewGini(s: SparkSession, dir: String): DataFrame = {
     // per-key frequency tables pooled (each was re-folded from the
-    // FACT table three times by the rank core's jobs), then all three
-    // keys ranked through ONE shared-bounds bucketed pass: quantile
-    // bounds affect only bucket BALANCE, never ranks (equal values
-    // never split across buckets; the rank is the position in the
-    // per-key (cnt, k) total order), so one approxQuantile job over
-    // the union and one (key_col, bkt) marginals job replace two jobs
-    // per key — the withGlobalRanksMulti discipline applied across
-    // stacked key domains instead of side-by-side columns.
+    // FACT table three times by the rank jobs), then all three keys
+    // ranked by ONE GlobalRank call grouped by key_col
     def keyCounts(name: String, keyed: DataFrame): DataFrame =
       graft.CachePool.cached(s, s"dq.keyCounts:$dir:$name") {
         keyed.groupBy("k").agg(count(lit(1)).as("cnt"))
-          .withColumn("cnt_d", col("cnt").cast("double"))
       }.select(lit(name).as("key_col"), col("k").cast("long").as("k"),
-        col("cnt"), col("cnt_d"))
+        col("cnt"))
     val li = Tables.lineitem(s, dir)
     val all = keyCounts("l_suppkey", li.select(col("l_suppkey").as("k")))
       .unionByName(keyCounts("l_partkey",
         li.select(col("l_partkey").as("k"))))
       .unionByName(keyCounts("user_id",
         Tables.events(s, dir).select(col("user_id").as("k"))))
-    val nBuckets = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val bounds = all.stat.approxQuantile("cnt_d",
-      (1 until nBuckets).map(_.toDouble / nBuckets).toArray, 0.001)
-      .distinct.sorted.toSeq
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("cnt_d") > lit(b), 1).otherwise(0)
-    }
-    val bucketed = all.withColumn("bkt", bucket)
-    val marg = bucketed.groupBy("key_col", "bkt")
-      .agg(count(lit(1)).as("m"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    val keys = marg.map(_._1).distinct.sorted
-    val offMap = keys.toSeq.flatMap { kc =>
-      val counts = marg.filter(_._1 == kc).map(t => (t._2, t._3))
-        .sortBy(_._1).toSeq
-      counts.zip(counts.scanLeft(0L)(_ + _._2)).map {
-        case ((b, _), off) => (s"$kc:$b", off) }
-    }
-    val nPerKey = keys.toSeq.map(kc =>
-      kc -> marg.filter(_._1 == kc).map(_._3).sum)
-    val offExpr = element_at(
-      map(offMap.flatMap { case (k2, o) => Seq(lit(k2), lit(o)) }: _*),
-      concat_ws(":", col("key_col"), col("bkt")))
-    val nExpr = element_at(
-      map(nPerKey.flatMap { case (k2, o) => Seq(lit(k2), lit(o)) }: _*),
-      col("key_col"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key_col", "bkt").orderBy(col("cnt_d"), col("k"))
-    bucketed.withColumn("grn", offExpr + row_number().over(w))
-      .withColumn("nk", nExpr)
-      .groupBy("key_col")
+    val (ranked, _) = GlobalRank.rank(s, all, Seq("key_col"), "cnt", "k",
+      descending = false)
+    ranked.groupBy("key_col")
       .agg(sum(col("grn") * col("cnt")).as("s_ix"),
-        sum(col("cnt")).as("s_x"), max(col("nk")).as("n_keys"))
+        sum(col("cnt")).as("s_x"), count(lit(1)).as("n_keys"))
       .select(col("key_col"), col("n_keys"),
         col("s_x").as("total_rows"),
         (lit(2L) * col("s_ix") - (col("n_keys") + 1) * col("s_x"))

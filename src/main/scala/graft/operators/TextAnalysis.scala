@@ -900,17 +900,17 @@ object TextAnalysis {
     * (keep head, sample middle, drop tail) and the mixture knob
     * data-curation recipes tune. The score is lmScore's exact
     * rational mean (avg bigram probability — same ordering as
-    * perplexity, no libm), the global rank runs through the bucketed
-    * global-rank core (NO single-partition window — approx-quantile
-    * bounds only balance buckets, ranks stay exact), and the tercile
+    * perplexity, no libm), the global rank runs through GlobalRank
+    * (NO single-partition window), and the tercile
     * is the integer law (rank−1)·3 div n, so the assignment replays
     * exactly in SQL. Docs with zero bigrams carry no score and stay
     * out, matching the oracle's scored set.
     */
   def perplexityBuckets(s: SparkSession, dir: String): DataFrame = {
     val scored = lmScore(s, dir)
-    val (ranked, n) = Analytics.withGlobalRank(s, scored, "avg_p",
+    val (ranked, counts) = GlobalRank.rank(s, scored, Nil, "avg_p",
       "doc_id", descending = true)
+    val n = counts.values.sum
     ranked.select(col("doc_id"), col("n_bigrams"), col("avg_p"),
         col("grn").as("lm_rank"),
         element_at(array(lit("head"), lit("middle"), lit("tail")),

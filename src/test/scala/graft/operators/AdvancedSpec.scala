@@ -406,8 +406,8 @@ class AdvancedSpec extends SparkSpec {
       (1L, 10L, 5L), (2L, 11L, 6L), (3L, 10L, 7L),
       (4L, 8L, 9L), (5L, 8L, 9L), (6L, 9L, 9L), (7L, 20L, 1L)
     ).toDF("id", "k1", "k2")
-    val got = Advanced.skylineMinMin(s, in).collect()
-      .map(_.getLong(0)).toSet
+    val got = Advanced.skylineLegs(s, in, Seq(col("k2")))
+      .filter(!col("dom_0")).collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 4L, 5L, 7L), got.toString)
   }
 
@@ -421,7 +421,8 @@ class AdvancedSpec extends SparkSpec {
     val in = (1L to 2000L).map { i =>
       (i, i, 4000L - i + (i * 2654435761L) % 97)
     }.toDF("id", "k1", "k2").cache()
-    val sky = Advanced.skylineMinMin(s, in).collect().map(_.getLong(0)).toSet
+    val sky = Advanced.skylineLegs(s, in, Seq(col("k2")))
+      .filter(!col("dom_0")).collect().map(_.getLong(0)).toSet
     val brute = in.as("x").join(in.as("y"),
         col("y.k1") <= col("x.k1") && col("y.k2") <= col("x.k2") &&
           (col("y.k1") < col("x.k1") || col("y.k2") < col("x.k2")),
