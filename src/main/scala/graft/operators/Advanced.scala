@@ -334,10 +334,11 @@ object Advanced {
     * anchor seeds the loop, each step is an ordinary DISTRIBUTED join
     * of the fact against the previous iteration's rows, and the loop
     * ends when a step produces no rows. This is the engine-native form
-    * of the label-propagation loops hand-built elsewhere
-    * (`Dedup.connectedComponents` drives its own fixpoint because it
-    * needs per-round checkpointing + change counts; a plain hierarchy
-    * walk belongs in the planner's loop operator).
+    * of the label-propagation loops elsewhere
+    * (`Dedup.connectedComponents` runs through `Iterate` because it
+    * needs per-round checkpoints, observed change counts and a round
+    * cap; a plain hierarchy walk belongs in the planner's loop
+    * operator).
     *
     * The hierarchy is synthesized deterministically from the customer
     * table: parent(c) = floor(c/10), rooting every key at its < 10

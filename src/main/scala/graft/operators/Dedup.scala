@@ -440,7 +440,6 @@ object Dedup {
     * LSH candidates — the 100 TB path.
     */
   def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val bands = 8; val rows = 4
     // candidate pairs via group-expand (pairCounts shape): LSH band
     // buckets are small by construction (near-dups + rare collisions),
     // so one shuffle of the banded rows replaces the two-sided
@@ -448,13 +447,7 @@ object Dedup {
     // pruning + final semi join), and CachePool bounds + releases the
     // storage across a multi-query session.
     val cand = graft.CachePool.cached(s, s"dedup.minhashCand:$dir") {
-      minhashSignatures(s, dir, bands * rows)
-        .select(col("doc_id"), explode(array((0 until bands).map {
-          b => struct(lit(b).as("band"),
-            xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows)).as("bkey"))
-        }: _*)).as("bb"))
-        .select(col("doc_id"),
-          concat_ws(":", col("bb.band"), col("bb.bkey")).as("bandkey"))
+      bandKeys(s, dir)
         .transform(pairCounts(_, "bandkey", "doc_id"))
         .select(col("doc_a"), col("doc_b"))
     }
@@ -531,16 +524,21 @@ object Dedup {
     * read it; the bucketed variant persists its history slice).
     */
   private def bandIndex(s: SparkSession, dir: String): DataFrame =
-    graft.CachePool.cached(s, s"dedup.bandIndex:$dir") {
-      val bands = 8; val rows = 4
-      minhashSignatures(s, dir, bands * rows)
-        .select(col("doc_id"), explode(array((0 until bands).map {
-          b => struct(lit(b).as("band"),
-            xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows)).as("bkey"))
-        }: _*)).as("bb"))
-        .select(col("doc_id"),
-          concat_ws(":", col("bb.band"), col("bb.bkey")).as("bandkey"))
-    }
+    graft.CachePool.cached(s, s"dedup.bandIndex:$dir")(bandKeys(s, dir))
+
+  /** Every doc's 8 LSH band keys ("band:hash" of 4 MinHash rows each),
+    * the rows both minhashPairs and the band index are built from.
+    */
+  private def bandKeys(s: SparkSession, dir: String): DataFrame = {
+    val bands = 8; val rows = 4
+    minhashSignatures(s, dir, bands * rows)
+      .select(col("doc_id"), explode(array((0 until bands).map {
+        b => struct(lit(b).as("band"),
+          xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows)).as("bkey"))
+      }: _*)).as("bb"))
+      .select(col("doc_id"),
+        concat_ws(":", col("bb.band"), col("bb.bkey")).as("bandkey"))
+  }
 
   /** Shared probe + verify + audit tail of both incremental-LSH
     * forms: delta bands probe the supplied history index (bucket-equi
@@ -667,13 +665,13 @@ object Dedup {
     * Iterative min-label propagation: each round every node takes the
     * min of its own and its neighbors' labels — one distributed
     * join + groupBy per round, repeated until a round changes nothing.
-    * The driver loop only reads the per-round CHANGE COUNT (a scalar);
-    * rows never leave the cluster, and `localCheckpoint` truncates the
-    * per-round lineage so plans stay flat. The doubling step makes
-    * rounds O(log n) even on chain-shaped components (never
-    * O(diameter)); `connectedComponentsStar` offers the large-star/
-    * small-star alternation behind the same interface — same log-round
-    * convergence (CCStarSpec pins both), but its per-round cost
+    * The loop only reads the per-round CHANGE COUNT (a scalar,
+    * observed on the round's checkpoint); rows never leave the
+    * cluster, and `Iterate` owns the lineage cut and the round cap.
+    * The doubling step makes rounds O(log n) even on chain-shaped
+    * components (never O(diameter)); `connectedComponentsStar`
+    * offers the large-star/small-star alternation behind the same
+    * interface — same log-round convergence (CCStarSpec pins both), but its per-round cost
     * SHRINKS as the edge set contracts toward stars, the better trade
     * when edges vastly outnumber nodes.
     */
@@ -865,61 +863,48 @@ object Dedup {
     */
   private[operators] def ccPropagation(pairs: DataFrame,
       shortcut: Boolean = true): (DataFrame, Int) = {
-    val p = pairs.toDF("doc_a", "doc_b")
-    val edges = p
-      .unionByName(p.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
+    val edges = Graph.bothWays(pairs.toDF("a", "b"))
       .localCheckpoint() // consumed every round; computed once
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      val neighborMin = edges
-        .join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("label")).as("nbr_min"))
-      // checkpointed: BOTH sides of the shortcut self-join below read
-      // it — left lazy, each side would re-run the propagation join
-      val propagated = labels
-        .join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label")))
-            .as("label"))
-        .localCheckpoint()
-      // shortcut: label := label-of-label (left join: a label that is
-      // its own component's current root maps to itself)
-      val next = if (!shortcut) propagated else propagated
-        .join(propagated.select(col("doc_id").as("label"),
-          col("label").as("label2")), Seq("label"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("label2"), col("label")))
-            .as("label"))
-        .localCheckpoint()
-      changed = next
-        .join(labels.withColumnRenamed("label", "prev"), Seq("doc_id"))
-        .filter(col("label") =!= col("prev"))
-        .count()
-      // the superseded checkpoints' blocks are dead the moment
-      // `changed` is computed — release them NOW rather than waiting
-      // for GC + ContextCleaner (the deterministic version of the
-      // cache-lifecycle rule the rest of the engine follows).
-      // (With the shortcut disabled `next` IS `propagated` — don't
-      // release the blocks the next round reads.)
-      if (next ne propagated) propagated.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-      labels = next
+    // each round's state carries its `prev` label, so the change count
+    // is observed on the round's own checkpoint; plain propagation
+    // needs at most one round per node plus the round that sees no
+    // change, so nodes + 1 caps both variants
+    val init = edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("label"),
+        col("doc_id").as("prev"))
+    val (fixed, rounds) = Iterate.fixpoint("ccPropagation", init,
+        Seq(count(lit(1)).as("nodes"),
+          count_if(col("label") =!= col("prev")).as("changed")))(
+        c => (c("nodes") + 1).toInt)((_, now) => now("changed") == 0) {
+      (state, round) =>
+        val labels = state.select("doc_id", "label")
+        val neighborMin = edges
+          .join(labels, edges("dst") === labels("doc_id"))
+          .groupBy(col("src").as("doc_id"))
+          .agg(min(col("label")).as("nbr_min"))
+        val propagated = labels
+          .join(neighborMin, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            least(col("label"), coalesce(col("nbr_min"), col("label")))
+              .as("label"),
+            col("label").as("prev"))
+        if (!shortcut) propagated
+        else {
+          // checkpointed: BOTH sides of the shortcut self-join read
+          // it — left lazy, each side would re-run the propagation join
+          val cut = round.checkpoint(propagated)
+          // shortcut: label := label-of-label (left join: a label that
+          // is its own component's current root maps to itself)
+          cut.join(cut.select(col("doc_id").as("label"),
+              col("label").as("label2")), Seq("label"), "left")
+            .select(col("doc_id"),
+              least(col("label"), coalesce(col("label2"), col("label")))
+                .as("label"),
+              col("prev"))
+        }
     }
-    edges.unpersist(blocking = false)
-    // the RETURNED checkpoint stays persisted while the caller holds
-    // it; it's one row per pair-connected doc (tiny), and the
-    // ContextCleaner reclaims it when the DataFrame goes unreachable —
-    // localCheckpoint blocks are GC-tracked, unlike CacheManager
-    // entries
-    (labels, rounds)
+    Iterate.release(edges)
+    (fixed.select("doc_id", "label"), rounds)
   }
 
   /** Large-star/small-star connected components (the alternation from
@@ -941,9 +926,9 @@ object Dedup {
     * Scale shape per round: two groupBy-min passes + equi joins on
     * the CURRENT edge set (which only shrinks toward one edge per
     * non-root node); no collect beyond the per-round convergence
-    * scalar; localCheckpoint keeps lineage flat. Hot hubs (a root
-    * with millions of members) stay ONE row per member edge — never
-    * a group-expand.
+    * counts, which `Iterate` observes on the round's checkpoint. Hot
+    * hubs (a root with millions of members) stay ONE row per member
+    * edge — never a group-expand.
     */
   def connectedComponentsStar(pairs: DataFrame): DataFrame =
     ccStar(pairs)._1
@@ -954,43 +939,41 @@ object Dedup {
       .unionByName(p.select(col("doc_b").as("n")))
       .distinct()
       .localCheckpoint()
-    // normalized invariant: every edge stored as (u, v) with u > v
-    var e = p.filter(col("doc_a") =!= col("doc_b"))
+    // normalized invariant: every edge stored as (u, v) with u > v;
+    // `fresh` marks an edge the previous round's set lacked, so the
+    // fixpoint test (same edge count, nothing fresh: the sets are
+    // equal) is observed on the round's own checkpoint
+    val init = p.filter(col("doc_a") =!= col("doc_b"))
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .distinct()
-      .localCheckpoint()
-    var eCount = e.count()
-    var rounds = 0
-    var stable = false
-    while (!stable) {
-      rounds += 1
-      // large-star over the symmetric neighborhood
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val large = sym.filter(col("v") > col("u"))
-        .join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-        .localCheckpoint()
-      // small-star over the strictly-smaller neighborhoods (input is
-      // already (u > v) normalized, so no symmetrization needed)
-      val sMins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(sMins, "u")
-        .select(col("v").as("x"), col("m"))
-        .filter(col("x") =!= col("m"))
-        .unionByName(sMins.select(col("u").as("x"), col("m")))
-        .select(col("x").as("u"), col("m").as("v"))
-        .distinct()
-        .localCheckpoint()
-      val nextCount = small.count()
-      stable = nextCount == eCount && small.except(e).isEmpty
-      large.unpersist(blocking = false)
-      e.unpersist(blocking = false)
-      e = small
-      eCount = nextCount
+      .withColumn("fresh", lit(true))
+    val (e, rounds) = Iterate.fixpoint("ccStar", init,
+        Seq(count(lit(1)).as("edges"), count_if(col("fresh")).as("fresh")))(
+        _ => StarRoundCap)(
+        (prev, now) => now("edges") == prev("edges") && now("fresh") == 0) {
+      (state, round) =>
+        val e = state.select("u", "v")
+        // large-star over the symmetric neighborhood
+        val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = sym.groupBy("u")
+          .agg(min(col("v")).as("mv"))
+          .select(col("u"), least(col("mv"), col("u")).as("m"))
+        val large = round.checkpoint(sym.filter(col("v") > col("u"))
+          .join(mins, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .distinct())
+        // small-star over the strictly-smaller neighborhoods (input is
+        // already (u > v) normalized, so no symmetrization needed)
+        val sMins = large.groupBy("u").agg(min(col("v")).as("m"))
+        large.join(sMins, "u")
+          .select(col("v").as("x"), col("m"))
+          .filter(col("x") =!= col("m"))
+          .unionByName(sMins.select(col("u").as("x"), col("m")))
+          .select(col("x").as("u"), col("m").as("v"))
+          .distinct()
+          .join(e.withColumn("old", lit(true)), Seq("u", "v"), "left")
+          .select(col("u"), col("v"), col("old").isNull.as("fresh"))
     }
     // fixpoint edges are (member, component-min); roots label themselves
     val labels = e.select(col("u").as("doc_id"), col("v").as("label"))
@@ -998,10 +981,16 @@ object Dedup {
         .join(e.select(col("u")), nodes("n") === e("u"), "left_anti")
         .select(col("n").as("doc_id"), col("n").as("label")))
       .localCheckpoint()
-    nodes.unpersist(blocking = false)
-    e.unpersist(blocking = false)
+    Iterate.release(nodes)
+    Iterate.release(e)
     (labels, rounds)
   }
+
+  /** Round cap of the star alternation: its worst case is O(log² n)
+    * rounds (Kiveris et al.), and measured runs take 4–8; a run past
+    * this many rounds is a non-converging step, not a large graph.
+    */
+  private val StarRoundCap = 100
 
   /** Benchmark decontamination: find training documents that share
     * verbatim k-grams with a held-out benchmark set — the overlap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -37,8 +37,7 @@ object Graph {
     * Scale shape per iteration: one shuffle keyed by dst (the
     * contribution sum); ranks and degrees join edges by src — at
     * 100 TB that is a co-partitioned join on the same key the next
-    * round shuffles anyway. localCheckpoint truncates the per-round
-    * lineage so plan depth stays flat (the CC/BPE loop discipline).
+    * round shuffles anyway. The rounds run through `Iterate`.
     */
   def pagerank(s: SparkSession, dir: String, iterations: Int = 3)
       : DataFrame =
@@ -73,18 +72,14 @@ object Graph {
     * oracle replays the SAME bounded unrolling, so the gate checks
     * the iteration exactly, not just its limit. Per round: one
     * map-side-combined degree count + two equi-joins keyed by the
-    * endpoints; localCheckpoint truncates per-round lineage. No
-    * floats anywhere.
+    * endpoints, run through `Iterate`. No floats anywhere.
     */
   def kcore(s: SparkSession, dir: String, rounds: Int = 3): DataFrame =
     // pooled like pagerank/lpa: the peel's job cascade (threshold
     // derivation + one checkpointed prune per round) is the cost, the
     // result is |core| rows — one build per (session, dir, rounds)
     graft.CachePool.cached(s, s"graph.kcore:$dir:$rounds") {
-      val und = pooledEdges(s, dir)
-      val sym = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      kcoreEdges(sym, rounds)
+      kcoreEdges(bothWays(pooledEdges(s, dir)), rounds)
     }
 
   /** The peel core over any symmetric edge set (both directions
@@ -93,6 +88,7 @@ object Graph {
     */
   private[operators] def kcoreEdges(sym: DataFrame,
       rounds: Int): DataFrame = {
+    require(rounds >= 1, s"kcore needs at least one round, got $rounds")
     val d0 = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     val degCounts = d0.groupBy("deg").agg(count(lit(1)).as("cnt"))
     val n1 = d0.agg(count(lit(1)).as("n"))
@@ -105,23 +101,24 @@ object Graph {
       .agg(min(col("deg")).as("med"))
       .select((col("med") + 1).as("k"))
       .localCheckpoint() // 1 row, read every round
-    var edges = sym
-    (1 to rounds).foreach { _ =>
-      // keep is read twice below but BOTH reads live in the next
-      // round's single job over the checkpointed prior edge set — a
-      // cheap re-aggregation, not worth its own eager checkpoint job
+    def prune(edges: DataFrame): DataFrame = {
+      // keep is read twice below but BOTH reads live in the round's
+      // single job over the checkpointed prior edge set — a cheap
+      // re-aggregation, not worth its own eager checkpoint job
       // (measured: the per-round keep checkpoints were most of the
       // query's wall time at sf0.1)
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .crossJoin(broadcast(kk))
         .filter(col("deg") >= col("k"))
         .select(col("src").as("kn"))
-      edges = edges
+      edges
         .join(keep, col("src") === col("kn")).drop("kn")
         .join(keep.select(col("kn").as("kn2")), col("dst") === col("kn2"))
         .drop("kn2")
-        .localCheckpoint()
     }
+    // round 1 prunes the caller's edges, so its output seeds the loop
+    val edges = Iterate.rounds(prune(sym), rounds - 1)((e, _) => prune(e))
+    Iterate.release(kk)
     edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
       .orderBy("node")
@@ -135,40 +132,46 @@ object Graph {
     graft.CachePool.cached(s, s"graph.bipartiteEdges:$dir") {
       val pair = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(
-          (-(col("l_suppkey") + 1)).as("supp_node"),
-          col("o_custkey").as("cust_node"))
+        .groupBy( // a = supplier node, b = customer node
+          (-(col("l_suppkey") + 1)).as("a"), col("o_custkey").as("b"))
         .agg(count(lit(1)).as("w"))
-      pair
-        .select(col("supp_node").as("src"), col("cust_node").as("dst"),
-          col("w"))
-        .unionByName(pair.select(col("cust_node").as("src"),
-          col("supp_node").as("dst"), col("w")))
-        .localCheckpoint()
+      bothWays(pair, col("w")).localCheckpoint()
     }
+
+  /** The bipartite edges' out-degrees, and the edges annotated with
+    * their source's degree ONCE (checkpointed: re-joining degrees
+    * inside the rank loop would repeat a full edge-table join every
+    * round for a value that never changes).
+    */
+  private def degreeEdges(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val edges = bipartiteEdges(s, dir)
+    val outdeg = edges.groupBy("src").agg(sum(col("w")).as("outdeg"))
+    (outdeg, edges.join(outdeg, Seq("src")).localCheckpoint())
+  }
+
+  /** Each edge's share of its source's rank, scaled to an exact
+    * integer (see pagerank's doc).
+    */
+  private def contributions(edgesDeg: DataFrame, ranks: DataFrame)
+      : DataFrame =
+    edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
+      .select(col("dst"),
+        round(col("rank") * col("w") / col("outdeg") * lit(1e12))
+          .cast("long").as("c"))
 
   private def pagerankBuild(s: SparkSession, dir: String,
       iterations: Int): DataFrame = {
-    val edges = bipartiteEdges(s, dir)
-    val outdeg = edges.groupBy("src").agg(sum(col("w")).as("outdeg"))
-    // loop-invariant: each edge annotated with its source's degree
-    // ONCE — re-joining degrees inside the loop would repeat a full
-    // edge-table join every round for a value that never changes
-    val edgesDeg = edges.join(outdeg, Seq("src")).localCheckpoint()
+    val (outdeg, edgesDeg) = degreeEdges(s, dir)
     val n = outdeg.count() // node set = all edge sources (both sides)
-    var ranks = outdeg.select(col("src").as("node"),
-      (lit(1.0) / n).as("rank")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = edgesDeg
-        .join(ranks, edgesDeg("src") === ranks("node"))
-        .select(col("dst"),
-          round(col("rank") * col("w") / col("outdeg") * lit(1e12))
-            .cast("long").as("c"))
-      ranks = contrib.groupBy(col("dst").as("node"))
+    val init = outdeg.select(col("src").as("node"),
+      (lit(1.0) / n).as("rank"))
+    val ranks = Iterate.rounds(init, iterations) { (ranks, _) =>
+      contributions(edgesDeg, ranks).groupBy(col("dst").as("node"))
         .agg((lit(0.15) / n +
           lit(0.85) * (sum(col("c")) / lit(1e12))).as("rank"))
-        .localCheckpoint()
     }
+    Iterate.release(edgesDeg)
     ranks.orderBy("node")
   }
 
@@ -197,9 +200,7 @@ object Graph {
 
   private def pprBuild(s: SparkSession, dir: String, iterations: Int,
       topN: Int): DataFrame = {
-    val edges = bipartiteEdges(s, dir)
-    val outdeg = edges.groupBy("src").agg(sum(col("w")).as("outdeg"))
-    val edgesDeg = edges.join(outdeg, Seq("src")).localCheckpoint()
+    val (outdeg, edgesDeg) = degreeEdges(s, dir)
     val seeds = Tables.customer(s, dir)
       .filter(col("c_nationkey") === 1)
       .select(col("c_custkey").as("node"))
@@ -207,25 +208,21 @@ object Graph {
         "left_semi")
       .localCheckpoint()
     val nS = seeds.count()
-    var ranks = seeds.select(col("node"), (lit(1.0) / nS).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = edgesDeg
-        .join(ranks, edgesDeg("src") === ranks("node"))
-        .select(col("dst"),
-          round(col("rank") * col("w") / col("outdeg") * lit(1e12))
-            .cast("long").as("c"))
-      val walk = contrib.groupBy(col("dst").as("node"))
+    val init = seeds.select(col("node"), (lit(1.0) / nS).as("rank"))
+    val ranks = Iterate.rounds(init, iterations) { (ranks, _) =>
+      val walk = contributions(edgesDeg, ranks)
+        .groupBy(col("dst").as("node"))
         .agg((lit(0.85) * (sum(col("c")) / lit(1e12))).as("walk"))
-      ranks = walk
+      walk
         .join(seeds.select(col("node"), lit(1).as("is_seed")),
           Seq("node"), "full_outer")
         .select(col("node"),
           (when(col("is_seed").isNotNull, lit(0.15) / nS)
             .otherwise(lit(0.0)) +
             coalesce(col("walk"), lit(0.0))).as("rank"))
-        .localCheckpoint()
     }
+    Iterate.release(edgesDeg)
+    Iterate.release(seeds)
     ranks.filter(col("node") < 0)
       .select((-col("node") - 1).as("s_suppkey"), col("rank"))
       .orderBy(col("rank").desc, col("s_suppkey"))
@@ -248,8 +245,7 @@ object Graph {
     * aggregated map-side; labels join edges by src, the same key the
     * next round shuffles (co-partitioned at scale). The argmax rides
     * max(struct(score, -lbl)) — an ordinary aggregate, no window, no
-    * single-partition choke. localCheckpoint per round keeps plan
-    * depth flat (the CC/BPE/pagerank loop discipline).
+    * single-partition choke. The rounds run through `Iterate`.
     */
   def labelPropagation(s: SparkSession, dir: String,
       iterations: Int = 3): DataFrame =
@@ -271,16 +267,15 @@ object Graph {
     */
   private[operators] def lpaRounds(edges: DataFrame,
       iterations: Int): DataFrame = {
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      labels = edges.join(labels, edges("src") === labels("node"))
+    val init = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+    val labels = Iterate.rounds(init, iterations) { (labels, _) =>
+      edges.join(labels, edges("src") === labels("node"))
         .groupBy(col("dst"), col("lbl"))
         .agg(sum(col("w")).as("score"))
         .groupBy(col("dst").as("node"))
         .agg(max(struct(col("score"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("lbl"))
-        .localCheckpoint()
     }
     labels.select(col("node"), col("lbl").as("community"))
       .orderBy("node")
@@ -323,10 +318,7 @@ object Graph {
     */
   private def modularityCore(s: SparkSession, und: DataFrame,
       lpaKey: String, iterations: Int): DataFrame = {
-    val edges = und.select(col("a").as("src"), col("b").as("dst"),
-        col("sup").as("w"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst"),
-        col("sup").as("w")))
+    val edges = bothWays(und, col("sup").as("w"))
     val lbl = graft.CachePool.cached(s, lpaKey) {
       lpaRounds(edges, iterations)
     }.select(col("node"), col("community"))
@@ -394,6 +386,14 @@ object Graph {
   private def pooledEdges(s: SparkSession, dir: String): DataFrame =
     pooledWeighted(s, dir).select("a", "b")
 
+  /** Both directions of an undirected (a, b) edge set, as (src, dst)
+    * plus `extra` columns computed on each copy.
+    */
+  private[operators] def bothWays(und: DataFrame, extra: Column*): DataFrame =
+    und.select(col("a").as("src") +: col("b").as("dst") +: extra: _*)
+      .unionByName(
+        und.select(col("b").as("src") +: col("a").as("dst") +: extra: _*))
+
   /** The pooled build keeps the support column so weighted consumers
     * (SSSP) share the same cached table as the unweighted ones —
     * dropping `sup` is a free row-local projection on top.
@@ -432,10 +432,7 @@ object Graph {
   def kcoreSample(s: SparkSession, dir: String, rounds: Int = 3)
       : DataFrame =
     graft.CachePool.cached(s, s"graph.kcoreSample:$dir:$rounds") {
-      val und = sampledWeighted(s, dir)
-      val sym = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      kcoreEdges(sym, rounds)
+      kcoreEdges(bothWays(sampledWeighted(s, dir)), rounds)
     }
 
   /** BFS over the sampled subgraph — same seed convention
@@ -491,6 +488,35 @@ object Graph {
 
   private[operators] def localClusteringEdges(e: DataFrame)
       : DataFrame = {
+    val (deg, er, wedges) = orientedWedges(e)
+    // INNER close (er rows unique per pair, so multiplicity is 1)
+    val tri = wedges.join(er.select(col("src").as("v"),
+      col("dst").as("w")), Seq("v", "w"))
+    val incid = tri
+      .select(explode(array(col("ctr"), col("v"), col("w"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("n_tri"))
+    deg.join(incid, deg("v") === incid("node"), "left")
+      .select(col("v").as("node"), col("d").as("degree"),
+        coalesce(col("n_tri"), lit(0L)).as("n_triangles"))
+      .withColumn("lcc_ppm", when(col("degree") >= 2,
+        expr("n_triangles * 2000000L div (degree * (degree - 1))"))
+        .otherwise(0L))
+      .orderBy("node")
+  }
+
+  /** The degree-ordered wedge machinery of both triangle counters,
+    * over a distinct undirected edge set (a < b): the degree table
+    * (v, d); the edges oriented low → high (src, dst, dstd = dst's
+    * degree), checkpointed because the wedge join and its close read
+    * them three times; and the wedges (ctr, v, w), each pair of a
+    * center's out-edges once. Orientation needs only a TOTAL ORDER on
+    * nodes, not a materialized global rank (which would be a
+    * single-partition window — the shape this engine bans): (degree,
+    * id) tuples are compared row-locally after attaching each
+    * endpoint's degree.
+    */
+  private def orientedWedges(e: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("d"))
     val aLow = col("da") < col("db") ||
@@ -509,19 +535,7 @@ object Graph {
           (col("f.dstd") === col("g.dstd") && col("f.dst") < col("g.dst"))))
       .select(col("f.src").as("ctr"), col("f.dst").as("v"),
         col("g.dst").as("w"))
-    // INNER close (er rows unique per pair, so multiplicity is 1)
-    val tri = wedges.join(er.select(col("src").as("v"),
-      col("dst").as("w")), Seq("v", "w"))
-    val incid = tri
-      .select(explode(array(col("ctr"), col("v"), col("w"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    deg.join(incid, deg("v") === incid("node"), "left")
-      .select(col("v").as("node"), col("d").as("degree"),
-        coalesce(col("n_tri"), lit(0L)).as("n_triangles"))
-      .withColumn("lcc_ppm", when(col("degree") >= 2,
-        expr("n_triangles * 2000000L div (degree * (degree - 1))"))
-        .otherwise(0L))
-      .orderBy("node")
+    (deg, er, wedges)
   }
 
   /** The counting core over any distinct undirected edge set (a < b,
@@ -529,43 +543,22 @@ object Graph {
     * with hand-built graphs.
     */
   private[operators] def triangleCountEdges(e: DataFrame): DataFrame = {
-    val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    // orientation needs only a TOTAL ORDER on nodes, not a
-    // materialized global rank (which would be a single-partition
-    // window — the shape this engine bans): compare (degree, id)
-    // tuples row-locally after attaching each endpoint's degree
-    val aLow = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val er = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      .select(
-        when(aLow, col("a")).otherwise(col("b")).as("src"),
-        when(aLow, col("b")).otherwise(col("a")).as("dst"),
-        when(aLow, col("db")).otherwise(col("da")).as("dstd"))
-      .localCheckpoint() // read 3× below (wedge ×2 + close)
-    val wedges = er.as("f")
-      .join(er.as("g"), col("f.src") === col("g.src") &&
-        (col("f.dstd") < col("g.dstd") ||
-          (col("f.dstd") === col("g.dstd") && col("f.dst") < col("g.dst"))))
-      .select(col("f.dst").as("src"), col("g.dst").as("dst"))
+    val (deg, er, wedges) = orientedWedges(e)
     // semi join: each WEDGE ROW (one per (u,v,w) triple — different
     // u's over the same (v,w) are different triangles and stay
     // separate rows) survives iff the closing edge exists; left-semi
     // preserves left multiplicity while letting the build side stop
     // at first match
-    val closed = wedges.join(er.select(col("src"), col("dst")),
-      Seq("src", "dst"), "left_semi")
+    val closed = wedges.join(er.select(col("src").as("v"),
+      col("dst").as("w")), Seq("v", "w"), "left_semi")
     val out = closed.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(broadcast(er.agg(count(lit(1)).as("n_edges"))))
       .crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
       // eager 1-row checkpoint: the oriented edge blocks are dead the
-      // moment the counts exist — release them NOW (the engine's
-      // cache-lifecycle rule) instead of stranding a corpus-
-      // proportional checkpoint per invocation until GC
+      // moment the counts exist, so they are released here instead of
+      // stranding a corpus-proportional checkpoint until GC
       .localCheckpoint()
-    er.unpersist(blocking = false)
+    Iterate.release(er)
     out
   }
 
@@ -637,8 +630,7 @@ object Graph {
     */
   private[operators] def linkPredictionEdges(e: DataFrame, topN: Int)
       : DataFrame = {
-    val sym = e.select(col("a").as("w"), col("b").as("v"))
-      .unionByName(e.select(col("b").as("w"), col("a").as("v")))
+    val sym = bothWays(e).toDF("w", "v")
     val deg = sym.groupBy("w").agg(count(lit(1)).as("d"))
     // contrib depends only on the CENTER's degree — attach it before
     // the wedge join so the self-join carries no ambiguous column
@@ -667,10 +659,10 @@ object Graph {
     * frontier (not the visited set, and never all pairs) against the
     * adjacency, anti-joins out already-visited nodes, and tags
     * survivors with the round number. Per-round cost is
-    * O(frontier-adjacent edges) shuffled on node id; `localCheckpoint`
-    * cuts the plan after each round so round k's DAG doesn't replay
-    * rounds 1..k-1 (the same iterative-lineage discipline as pagerank
-    * / labelPropagation). Frontier and visited sets are node-sized
+    * O(frontier-adjacent edges) shuffled on node id; the rounds run
+    * through `Iterate`, one checkpoint each: the frontier is read
+    * back off the visited set (dist = round − 1), so only visited
+    * needs materializing. Frontier and visited sets are node-sized
     * DataFrames — nothing collects to the driver. Distances are
     * integers; the DuckDB oracle replays the identical rounds as
     * unrolled CTEs, so the row set is exact, not approximate.
@@ -689,8 +681,8 @@ object Graph {
     * Bellman–Ford invariant) — the declared semantics, which the
     * DuckDB oracle replays as r unrolled CTE rounds. Each round is
     * one dist ⋈ edges shuffle + one min groupBy (O(E) per round, the
-    * distributed-SSSP standard — Pregel without the framework), with
-    * a localCheckpoint lineage cut per round like pagerank/LPA/BFS.
+    * distributed-SSSP standard — Pregel without the framework), run
+    * through `Iterate` like pagerank/LPA/BFS.
     * Same seed convention as BFS (node % 50 == 0).
     */
   def sssp(s: SparkSession, dir: String, rounds: Int = 3): DataFrame =
@@ -700,45 +692,36 @@ object Graph {
 
   private[operators] def ssspEdges(e: DataFrame, rounds: Int)
       : DataFrame = {
-    val w = expr("1000000L div sup").as("w")
-    val sym = e.select(col("a").as("src"), col("b").as("dst"), w)
-      .unionByName(e.select(col("b").as("src"), col("a").as("dst"), w))
-    var dist = sym.select(col("src").as("node")).distinct()
-      .filter(col("node") % 50 === 0)
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val sym = bothWays(e, expr("1000000L div sup").as("w"))
+    Iterate.rounds(seeded(sym, lit(0L)), rounds) { (dist, _) =>
       val relaxed = dist.join(sym, dist("node") === sym("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dist.orderBy("node")
+    }.orderBy("node")
   }
+
+  /** The seed set of BFS and SSSP (every node ≡ 0 mod 50) at
+    * distance `zero`.
+    */
+  private def seeded(sym: DataFrame, zero: Column): DataFrame =
+    sym.select(col("src").as("node")).distinct()
+      .filter(col("node") % 50 === 0).withColumn("dist", zero)
 
   /** The frontier loop over any distinct undirected edge set (a < b) —
     * split out so specs can drive it with hand-built graphs.
     */
   private[operators] def bfsHopsEdges(e: DataFrame, rounds: Int)
       : DataFrame = {
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-    var visited = sym.select(col("src").as("node")).distinct()
-      .filter(col("node") % 50 === 0)
-      .withColumn("dist", lit(0))
-      .localCheckpoint()
-    var frontier = visited.select("node")
-    for (r <- 1 to rounds) {
-      val next = frontier.join(sym, frontier("node") === sym("src"))
+    val sym = bothWays(e)
+    Iterate.rounds(seeded(sym, lit(0)), rounds) { (visited, round) =>
+      val frontier = visited.filter(col("dist") === round.n - 1)
+        .select("node")
+      visited.unionByName(frontier.join(sym, frontier("node") === sym("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", lit(r))
-        .localCheckpoint()
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next.select("node")
-    }
-    visited.orderBy("node")
+        .withColumn("dist", lit(round.n)))
+    }.orderBy("node")
   }
 
   /** Item-item collaborative filtering over the co-purchase matrix:
@@ -770,17 +753,10 @@ object Graph {
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
     val itemCnt = li.groupBy(col("pk")).agg(count(lit(1)).as("c"))
-    val pairs = li.as("x").join(li.as("y"),
-        col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-      .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-      .agg(count(lit(1)).as("sup"))
-      .filter(col("sup") >= 2)
-    val sym = pairs.unionByName(pairs.select(col("b").as("a"),
-      col("a").as("b"), col("sup")))
-    val scored = sym
-      .join(itemCnt.select(col("pk").as("a"), col("c").as("c_a")), "a")
-      .join(itemCnt.select(col("pk").as("b"), col("c").as("c_b")), "b")
-      .select(col("a").as("item"), col("b").as("neighbor"),
+    val scored = bothWays(coPurchaseWeighted(s, dir), col("sup"))
+      .join(itemCnt.select(col("pk").as("src"), col("c").as("c_a")), "src")
+      .join(itemCnt.select(col("pk").as("dst"), col("c").as("c_b")), "dst")
+      .select(col("src").as("item"), col("dst").as("neighbor"),
         col("sup"), col("c_a").as("c_item"), col("c_b").as("c_neighbor"),
         expr("CAST(floor(CAST(sup AS DECIMAL(38,0)) * sup * 1000000" +
           " / (c_a * c_b)) AS BIGINT)").as("cos2_ppm"))

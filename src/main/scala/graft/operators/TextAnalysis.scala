@@ -1375,12 +1375,11 @@ object TextAnalysis {
       nMerges: Int): DataFrame =
     graft.CachePool.cached(s, s"text.bpeMerges:$dir:$nMerges") {
       import s.implicits._
-      var words = wordFreq(s, dir)
-        .select(encodeSymbols(col("word")).as("w"), col("n"))
-        .localCheckpoint()
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Int, String, String, Long)]
-      for (r <- 1 to nMerges) {
+      val init = wordFreq(s, dir)
+        .select(encodeSymbols(col("word")).as("w"), col("n"))
+      val words = Iterate.rounds(init, nMerges) { (words, round) =>
         val syms = symbolsOf(col("w"))
         val pairs = zip_with(
           slice(syms, lit(1), size(syms) - 1),
@@ -1392,14 +1391,10 @@ object TextAnalysis {
           .orderBy(desc("cnt"), asc("pair")).limit(1)
           .collect().head
         val Array(a, b) = best.getString(0).split(" ", 2)
-        merges += ((r, a, b, best.getLong(1)))
-        val next = words
-          .select(applyMerge(col("w"), a, b).as("w"), col("n"))
-          .localCheckpoint()
-        words.unpersist(blocking = false) // superseded round
-        words = next
+        merges += ((round.n, a, b, best.getLong(1)))
+        words.select(applyMerge(col("w"), a, b).as("w"), col("n"))
       }
-      words.unpersist(blocking = false) // merges are collected; all done
+      Iterate.release(words) // merges are collected; all done
       merges.toSeq.toDF("merge_rank", "left_sym", "right_sym", "pair_count")
     }
 
@@ -1415,9 +1410,8 @@ object TextAnalysis {
     * Scale shape per iteration: one explode + pair-count groupBy over
     * the word table (map-side combine absorbs the Zipf skew) and a
     * 1-row argmax to the driver; the merge application is a row-local
-    * projection, localCheckpointed each round (superseded rounds
-    * released immediately) so plan depth and per-iteration cost stay
-    * flat in nMerges.
+    * projection, and the rounds run through `Iterate`, so plan depth
+    * and per-iteration cost stay flat in nMerges.
     */
   def bpeTrain(s: SparkSession, dir: String, nMerges: Int = 8): DataFrame =
     bpeMerges(s, dir, nMerges).orderBy("merge_rank")

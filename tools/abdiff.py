@@ -12,9 +12,10 @@ code states on the same fixture, interleaved.
 commitB defaults to WORKING (the current working tree, uncommitted
 changes included). commitA (and a non-WORKING commitB) is checked out
 into a git worktree under .tmp/, compiled there, and the IDENTICAL
-filtered Bench subset runs alternately A,B,A,B,... (--rounds pairs,
-default 2) so an ambient-load burst lands on both sides rather than
-on whichever side happened to run inside it. Per query the paired
+filtered Bench subset runs in --rounds pairs (default 2), alternating
+which side runs first in each pair (A,B then B,A ...), so neither an
+ambient-load burst nor a drift that follows run order lands on one
+side only. Per query the paired
 mins are compared, plus each side's calib probes so the reader can
 see whether the box itself drifted between passes.
 
@@ -206,25 +207,29 @@ def main():
     for d in {dir_a, dir_b}:
         sh(["sbt", "-batch", "compile"], cwd=d)
 
-    runs_a, runs_b, calibs_a, calibs_b = [], [], [], []
+    runs = {"A": [], "B": []}
+    calibs = {"A": [], "B": []}
     for r in range(rounds):
-        qa, ca = bench_once(dir_a, queries, sf_dir, cpus)
-        runs_a.append(qa); calibs_a.append(ca)
-        qb, cb = bench_once(dir_b, queries, sf_dir, cpus)
-        runs_b.append(qb); calibs_b.append(cb)
-        print(f"[abdiff] pair {r + 1}/{rounds} done", file=sys.stderr)
+        order = ("A", "B") if r % 2 == 0 else ("B", "A")
+        for side in order:
+            q, c = bench_once(dir_a if side == "A" else dir_b, queries,
+                              sf_dir, cpus)
+            runs[side].append(q)
+            calibs[side].append(c)
+        print(f"[abdiff] pair {r + 1}/{rounds} ({order[0]} first) done",
+              file=sys.stderr)
 
-    def best(runs, q):
-        vals = [m[q] for m in runs if m.get(q, -1) is not None
+    def best(side_runs, q):
+        vals = [m[q] for m in side_runs if m.get(q, -1) is not None
                 and m.get(q, -1) >= 0]
         return min(vals) if vals else float("nan")
 
-    def calib_med(calibs):
-        vals = [v for c in calibs for v in c.values()
+    def calib_med(side_calibs):
+        vals = [v for c in side_calibs for v in c.values()
                 if isinstance(v, (int, float))]
         return statistics.median(vals) if vals else float("nan")
 
-    cal_a, cal_b = calib_med(calibs_a), calib_med(calibs_b)
+    cal_a, cal_b = calib_med(calibs["A"]), calib_med(calibs["B"])
     ambient = cal_b / cal_a if cal_a and cal_a > 0 else float("nan")
     rows = []
     print(f"\nA = {commit_a} ({dir_a})")
@@ -234,7 +239,7 @@ def main():
           f"ambient B/A={ambient:.2f}")
     print(f"{'query':<28} {'A_s':>8} {'B_s':>8} {'B/A':>6} {'norm':>6}")
     for q in queries:
-        a, b = best(runs_a, q), best(runs_b, q)
+        a, b = best(runs["A"], q), best(runs["B"], q)
         ratio = b / a if a and a > 0 else float("nan")
         norm = ratio / ambient if ambient and ambient > 0 else float("nan")
         rows.append({"query": q, "a_s": a, "b_s": b,
